@@ -38,6 +38,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from computer_vision_foundations_spark import get_spark
+from computer_vision_foundations_spark.session import DEFAULT_SHUFFLE_PARTITIONS
 from computer_vision_foundations_spark.queries import queries
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -301,15 +302,19 @@ def _finish(detail: dict, total: float) -> None:
     detail_path = os.environ.get(
         "SPARK_GRAFT_BENCH_DETAIL", os.path.join(here, "BENCH_DETAIL.json")
     )
+    # the core count local[N] ran at (session.py's default when unset)
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(DEFAULT_SHUFFLE_PARTITIONS)
     payload = {**detail, "total_sec": total, "sf": _sf_from_dir(SF_DIR),
-               "cpus": os.environ.get("SPARK_GRAFT_CPUS", "")}
+               "cpus": cpus}
     with open(detail_path, "w") as fh:
         json.dump(payload, fh, indent=1, sort_keys=True)
-    # Round-stamped copy next to it (same payload): survives the next
-    # run's overwrite of BENCH_DETAIL.json, so round N and N+1 detail
-    # can be diffed even when only the working tree is inspected.
+    # Round- and core-count-stamped copy next to it (same payload):
+    # survives the next run's overwrite of BENCH_DETAIL.json, and the
+    # 8-core run no longer overwrites the 32-core detail, so round N
+    # and N+1 detail can be diffed per core count even when only the
+    # working tree is inspected.
     round_path = os.path.join(
-        os.path.dirname(detail_path), f"BENCH_DETAIL_r{_ROUND}.json"
+        os.path.dirname(detail_path), f"BENCH_DETAIL_r{_ROUND}_c{cpus}.json"
     )
     with open(round_path, "w") as fh:
         json.dump(payload, fh, indent=1, sort_keys=True)

@@ -72,6 +72,12 @@ def shingles_from_tokens(toks: Column | str, k: int = 3) -> Column:
     the k slice references keep CollapseProject from inlining an
     expensive upstream expression. Documents shorter than k tokens
     produce one whole-doc shingle.
+
+    Higher-order-function lambdas are interpreted, not code-generated:
+    the k-1 ``zip_with`` folds cost one interpreted lambda call per
+    shingle per fold. Consumers that explode the shingles anyway (and
+    do not need them distinct) should use :func:`shingle_rows`, which
+    builds the same shingle strings without lambdas.
     """
     toks = F.col(toks) if isinstance(toks, str) else toks
     n = F.size(toks)
@@ -84,6 +90,49 @@ def shingles_from_tokens(toks: Column | str, k: int = 3) -> Column:
         )
     return F.when(n >= k, F.array_distinct(sh)).otherwise(
         F.array(F.array_join(toks, "|"))
+    )
+
+
+def shingle_rows(
+    df: DataFrame, toks: str, k: int = 3, keep: tuple[str, ...] = (),
+    out: str = "_shingle",
+) -> DataFrame:
+    """``(*keep, out)``: one row per word k-gram shingle of the
+    token-array column ``toks`` — the exploded, lambda-free twin of
+    :func:`shingles_from_tokens`.
+
+    ``inline(arrays_zip(slice(toks,1,m), …, slice(toks,k,m)))`` yields
+    one row per position with the k tokens as plain columns, then a
+    code-generated ``concat(t0,'|',t1,…)`` builds the shingle — the
+    same bytes the ``zip_with`` fold builds. A document shorter than k
+    tokens (or a null token array) yields its one whole-doc
+    ``array_join(toks,'|')`` shingle. Shingles are NOT distinct:
+    repeats stay as rows, which suits min/count-distinct consumers;
+    set consumers keep the array form.
+    """
+    t = F.col(toks)
+    n = F.size(t)
+    m = n - F.lit(k - 1)
+    is_full = n >= k
+    cols = [f"_sh{i}" for i in range(k)]
+    full = F.arrays_zip(*[F.slice(t, i + 1, m).alias(c) for i, c in enumerate(cols)])
+    short = F.array(
+        F.struct(
+            F.array_join(t, "|").alias(cols[0]),
+            *[F.lit(None).cast("string").alias(c) for c in cols[1:]],
+        )
+    )
+    rows = df.select(
+        *keep,
+        is_full.alias("_full"),
+        F.inline(F.when(is_full, full).otherwise(short)),
+    )
+    parts = [F.col(cols[0])]
+    for c in cols[1:]:
+        parts += [F.lit("|"), F.col(c)]
+    return rows.select(
+        *keep,
+        F.when(F.col("_full"), F.concat(*parts)).otherwise(F.col(cols[0])).alias(out),
     )
 
 

@@ -39,6 +39,7 @@ from computer_vision_foundations_spark.functions.hashing import (
 )
 from computer_vision_foundations_spark.functions.text import (
     fingerprint_md5,
+    shingle_rows,
     shingles_from_tokens,
     tokens,
 )
@@ -97,13 +98,24 @@ def _with_shingles(
     defeating lazy composition. At real scale the scan already yields
     ≥ cores partitions and callers should leave this ``None``.
     """
+    return _tokenized(df, text_col, id_col, id_alias, repartition_to).select(
+        id_alias, shingles_from_tokens("_toks", k).alias("_shingles")
+    )
+
+
+def _tokenized(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    id_alias: str,
+    repartition_to: int | None,
+) -> DataFrame:
+    """(id, _toks): the materialized token projection both shingle
+    forms build on (see ``_with_shingles``)."""
     if repartition_to is not None:
         df = df.repartition(repartition_to, F.col(id_col))
-    tokenized = df.select(
+    return df.select(
         F.col(id_col).alias(id_alias), tokens(text_col).alias("_toks")
-    )
-    return tokenized.select(
-        id_alias, shingles_from_tokens("_toks", k).alias("_shingles")
     )
 
 
@@ -269,8 +281,16 @@ def _minhash_wide(
 ) -> DataFrame:
     """``(doc_id, _m0.._m{n-1})`` minima via an exploded hash aggregate.
 
-    The scale plan: shingle (map-side array expr) → explode → hash
-    ONCE → ``groupBy(doc).agg(min(remix) × n_hashes)``. The aggregate
+    The scale plan: tokenize → one row per shingle → hash ONCE →
+    ``groupBy(doc).agg(min(remix) × n_hashes)``. The shingle rows come
+    from ``functions/text.shingle_rows`` (explode of zipped token
+    slices, then a code-generated concat), not from exploding the
+    ``shingles_from_tokens`` array, whose ``zip_with`` lambdas are
+    interpreted — one call per shingle per fold. On 5,000 docs
+    (276,636 shingles, local[2]) the array form measured 0.45 s
+    against 0.27 s for the rows. The rows keep repeated shingles: a
+    repeat cannot change a min, and each shingle's bytes are the array
+    form's, so both hash families give the same minima. The aggregate
     is whole-stage codegen'd with map-side partial aggregation, so the
     shuffle carries one row of n_hashes minima per doc per partition —
     never the shingles. Each shingle string is hashed exactly once for
@@ -281,8 +301,10 @@ def _minhash_wide(
     (per-seed interpreted HOF lambdas, then per-seed md5 digests)
     measured 10-70× slower.
     """
-    shingled = _with_shingles(df, text_col, id_col, "doc_id", k, repartition_to)
-    ex = shingled.select("doc_id", F.explode("_shingles").alias("_shingle"))
+    ex = shingle_rows(
+        _tokenized(df, text_col, id_col, "doc_id", repartition_to),
+        "_toks", k, keep=("doc_id",), out="_shingle",
+    )
     if hash_fn == "xxhash64":
         ex = ex.select("doc_id", F.xxhash64("_shingle").alias("_shingle"))
     elif hash_fn == "md5":

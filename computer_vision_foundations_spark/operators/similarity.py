@@ -143,7 +143,18 @@ def knn_join_blocked(
     (qid, nid, cos_sim) scalars — vectors never ride the pair stream.
     Each block's vectors must fit one task (same bound the join form's
     per-block window sort already imposed); the pair matrix itself is
-    chunked to ~32 MB."""
+    chunked to ~32 MB.
+
+    The task prunes before it emits (filter-then-verify): per query
+    row it keeps only the candidates whose unrounded cosine is within
+    ``2·10^-round_digits`` of the row's k-th best, plus every NaN
+    score (null after the Arrow crossing). Rounding moves a score by
+    at most half a step, so that is a superset of every pair that can
+    reach rank ≤ k; Spark's round and the top-k window then verify it,
+    so results are bit-identical to the unpruned pair set. The pair
+    stream leaving the task is about n·k rows (ties within the margin
+    add more), not Σ|block|²; the quadratic cost left is the in-task
+    matmul."""
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     id_type = df.schema[id_col].dataType
@@ -154,6 +165,22 @@ def knn_join_blocked(
             StructField("cos_sim", DoubleType()),
         ]
     )
+
+    # two rounding steps (see above) plus eps for the decimal round-trip
+    # inside Spark's round at steps near double precision
+    margin = 2.0 * 10.0 ** -round_digits + 8 * np.finfo(np.float64).eps
+
+    def _kth_floor(cos: np.ndarray, cand: np.ndarray) -> np.ndarray:
+        """Per row: its k-th largest candidate cosine minus ``margin``,
+        as a column; -inf where the row has fewer than k non-NaN
+        candidates (keep them all). NaN scores stay out of the bound
+        and are always emitted (they cross Arrow as nulls, which the
+        window ranks last)."""
+        if not 0 < k < cos.shape[1]:
+            return np.full((cos.shape[0], 1), -np.inf)
+        c = np.where(cand & ~np.isnan(cos), cos, -np.inf)
+        kth = np.partition(c, c.shape[1] - k, axis=1)[:, c.shape[1] - k]
+        return (kth - margin)[:, None]
 
     def _score_block(pdf: pd.DataFrame) -> pd.DataFrame:
         ids = pdf["_id"].to_numpy()
@@ -175,12 +202,13 @@ def knn_join_blocked(
             den = norms[s : s + chunk, None] * norms[None, :]
             with np.errstate(divide="ignore", invalid="ignore"):
                 cos = np.where(den > 0.0, num / den, 0.0)
-            qidx = np.repeat(np.arange(s, s + q.shape[0]), n)
-            nidx = np.tile(np.arange(n), q.shape[0])
-            keep = ids[qidx] != ids[nidx]  # the join's qid != nid
-            qs.append(ids[qidx[keep]])
-            ns.append(ids[nidx[keep]])
-            ss.append(cos.ravel()[keep])
+            cand = ids[s : s + chunk, None] != ids[None, :]  # qid != nid
+            qi, ni = np.nonzero(
+                cand & ((cos >= _kth_floor(cos, cand)) | np.isnan(cos))
+            )
+            qs.append(ids[s + qi])
+            ns.append(ids[ni])
+            ss.append(cos[qi, ni])
         return pd.DataFrame(
             {
                 "qid": np.concatenate(qs) if qs else [],
@@ -590,9 +618,10 @@ def mutual_knn_pairs(
     de-noised nearest-neighbor graphs, e.g. reciprocal-rank matching
     in image retrieval).
 
-    Scale shape: the kNN join's budget plus one self-equi-join of the
-    (qid, nid) edge list on the reversed key — edges are id pairs,
-    never vectors."""
+    Scale shape: the kNN join's budget — an in-task Σ|block|² matmul
+    whose pruned pair stream is about n·k rows — plus one
+    self-equi-join of the n·k (qid, nid) edge list on the reversed
+    key; edges are id pairs, never vectors."""
     knn = knn_join_blocked(df, k, block_col, vec_col, id_col)
     e = knn.select("qid", "nid", "cos_sim")
     rev = e.select(

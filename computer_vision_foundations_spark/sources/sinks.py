@@ -47,13 +47,24 @@ def dataset_bytes(df: DataFrame, byte_cols: tuple[str, ...] = ("content", "path"
     `03a_Model Training.py:121-122`: ``sum(length(content)+length(path))``).
 
     A scalar aggregate — one long per partition reaches the driver.
-    Columns absent from ``df`` are skipped.
+    Columns absent from ``df`` are skipped. String and binary columns
+    count their length; every other column counts the length of its
+    string rendering — for numbers exactly the implicit cast
+    ``length()`` applies, for array/map/struct columns (which
+    ``length()`` rejects) an estimate: ``[0.25, 1.0]`` counts 11.
     """
-    present = [c for c in byte_cols if c in df.columns]
+    types = dict(df.dtypes)
+    present = [c for c in byte_cols if c in types]
     if not present:
         return 0
-    expr = sum((F.sum(F.length(F.col(c))) for c in present[1:]),
-               F.sum(F.length(F.col(present[0]))))
+
+    def _len(c: str):
+        col = F.col(c)
+        if types[c] not in ("string", "binary"):
+            col = col.cast("string")
+        return F.sum(F.length(col))
+
+    expr = sum((_len(c) for c in present[1:]), _len(present[0]))
     val = df.agg(expr.alias("b")).first()["b"]
     return int(val or 0)
 

@@ -512,3 +512,56 @@ def test_containment_threshold_filters(spark):
     assert containment_pairs(docs, k=3, threshold=0.5).count() == 0
     got = containment_pairs(docs, k=3, threshold=0.3).collect()
     assert len(got) == 1 and abs(got[0]["overlap"] - 1 / 3) < 1e-6
+
+
+def test_minhash_row_shingles_match_array_form(spark):
+    """``minhash_signatures`` builds shingles as rows (no lambdas); its
+    signatures must equal the array form's — ``word_shingles`` exploded
+    into the same per-seed min aggregate — for both hash families,
+    including null/empty text, short docs, empty tokens, ``|`` inside a
+    token and repeated shingles."""
+    from computer_vision_foundations_spark.functions import word_shingles
+    from computer_vision_foundations_spark.functions.hashing import (
+        md5_hash_pair,
+        minhash_agg_columns,
+    )
+
+    docs = spark.createDataFrame(
+        [
+            (1, None),
+            (2, ""),
+            (3, "one"),
+            (4, "two words"),
+            (5, "a  b c  d"),  # double spaces: empty tokens
+            (6, "x|y z w|v q"),  # '|' inside tokens
+            (7, "la la la la la la"),  # one shingle, repeated
+            (8, "a b c a b c a b c d"),
+            (9, " lead and trail "),
+        ],
+        "doc_id long, text string",
+    )
+    for hash_fn in ("xxhash64", "md5"):
+        for k in (1, 3):
+            ex = docs.select(
+                "doc_id", F.explode(word_shingles("text", k)).alias("_s")
+            )
+            if hash_fn == "xxhash64":
+                ex = ex.select("doc_id", F.xxhash64("_s").alias("_s"))
+            else:
+                h1, h2 = md5_hash_pair("_s")
+                ex = ex.select(
+                    "doc_id", F.struct(h1.alias("h1"), h2.alias("h2")).alias("_s")
+                )
+            want = {
+                r["doc_id"]: [r[f"_m{s}"] for s in range(8)]
+                for r in ex.groupBy("doc_id")
+                .agg(*minhash_agg_columns("_s", 8, hash_fn))
+                .collect()
+            }
+            got = {
+                r.doc_id: list(r.signature)
+                for r in minhash_signatures(
+                    docs, k=k, n_hashes=8, hash_fn=hash_fn
+                ).collect()
+            }
+            assert got == want, (hash_fn, k)

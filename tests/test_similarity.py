@@ -282,3 +282,99 @@ def test_mutual_knn_pairs_reciprocity(spark):
     }
     for a, b in got:
         assert (a, b) in knn and (b, a) in knn
+
+
+def _fold_cosines(v):
+    """All-pairs cosine with the kNN task's arithmetic: ascending-dim
+    f64 folds for dots and norms, 0 where a norm product is not > 0."""
+    import numpy as np
+
+    n, d = v.shape
+    acc = np.zeros(n)
+    num = np.zeros((n, n))
+    with np.errstate(invalid="ignore", divide="ignore"):
+        for i in range(d):
+            acc += v[:, i] * v[:, i]
+            num += v[:, i : i + 1] * v[:, i]
+        den = np.sqrt(acc)[:, None] * np.sqrt(acc)[None, :]
+        return np.where(den > 0.0, num / den, 0.0)
+
+
+def test_knn_join_blocked_pruning_matches_unpruned(spark):
+    """The task emits only pairs near each row's k-th best; results
+    must equal the unpruned pair set (every within-block pair, Spark
+    round, then the shared top-k window) bit for bit."""
+    import math
+
+    import numpy as np
+
+    from pyspark.sql import functions as F
+
+    from computer_vision_foundations_spark.operators.similarity import (
+        _topk_per_query,
+        knn_join_blocked,
+    )
+
+    blocks = {}
+    # cosines < 1e-6 apart around rank k: after rounding the order is
+    # decided by nid, so the 3rd/4th best unrounded rows can win
+    cs = [0.9000004, 0.90000045, 0.9000003, 0.8999996, 0.899998, 0.8999984]
+    blocks["straddle"] = [(10, [1.0, 0.0])] + [
+        (nid, [c, math.sqrt(1 - c * c)])
+        for nid, c in zip([15, 19, 11, 12, 13, 14], cs)
+    ]
+    # exact ties at rank k: identical vectors
+    blocks["ties"] = [(20 + i, [1.0, 2.0, 3.0]) for i in range(5)] + [
+        (25, [3.0, 2.0, 1.0])
+    ]
+    # NaN / inf components (NaN scores, null after the Arrow crossing,
+    # rank last) and a zero vector
+    blocks["nonfinite"] = [
+        (30, [float("nan"), 1.0]), (31, [float("inf"), 1.0]),
+        (32, [1.0, 1.0]), (33, [1.0, 0.5]), (34, [2.0, 1.0]),
+        (35, [1.0, -1.0]), (36, [0.0, 0.0]), (37, [float("-inf"), 0.0]),
+    ]
+    blocks["small"] = [(40, [1.0, 0.0]), (41, [0.5, 0.5])]
+    blocks["single"] = [(50, [1.0, 2.0])]
+    # a duplicate id inside one block: its rows never pair with each
+    # other and their candidate lists merge under one qid
+    rng = np.random.RandomState(3)
+    blocks["dup_id"] = [
+        (60 + min(i, 3), [float(x) for x in rng.normal(size=4)])
+        for i in range(7)
+    ]
+    base = rng.normal(size=5)
+    blocks["random"] = [
+        (70 + i, [float(x) for x in base + rng.normal(scale=0.05, size=5)])
+        for i in range(12)
+    ]
+
+    rows, pairs = [], []
+    for blk, members in blocks.items():
+        ids = [i for i, _ in members]
+        rows += [(i, blk, vec) for i, vec in members]
+        cos = _fold_cosines(np.array([vec for _, vec in members]))
+        # the pandas→Arrow crossing turns a NaN score into null
+        pairs += [
+            (ids[a], ids[b], None if np.isnan(cos[a, b]) else float(cos[a, b]))
+            for a in range(len(ids))
+            for b in range(len(ids))
+            if ids[a] != ids[b]
+        ]
+    df = spark.createDataFrame(
+        rows, "vec_id long, label string, embedding array<double>"
+    )
+    full = spark.createDataFrame(pairs, "qid long, nid long, cos_sim double")
+
+    def key(r):
+        return (r.qid, r.nid, -2.0 if r.cos_sim is None else r.cos_sim, r.rank)
+
+    for k, digits in [(1, 6), (2, 6), (3, 6), (2, 2), (2, 9)]:
+        want = _topk_per_query(
+            full.withColumn("cos_sim", F.round("cos_sim", digits)),
+            k, "qid", "nid",
+        )
+        got = knn_join_blocked(df, k=k, block_col="label", round_digits=digits)
+        assert sorted(map(key, got.collect())) == sorted(
+            map(key, want.collect())
+        ), (k, digits)

@@ -93,6 +93,24 @@ def test_dataset_bytes(spark):
     )
     assert dataset_bytes(df) == 2 + 4 + 1 + 2
     assert dataset_bytes(df.select("path"), ("content",)) == 0
+    nums = spark.createDataFrame([(7, 1.5), (1234, None)], "id long, x double")
+    assert dataset_bytes(nums, ("id", "x")) == 1 + 4 + 3
+
+
+def test_dataset_bytes_nested_columns(spark, tmp_path):
+    """Array/map/struct columns get their string rendering's length
+    instead of the ``length()`` type error, so the default row-group
+    sizing of ``cache_for_training`` works on embedding tables."""
+    df = spark.createDataFrame(
+        [(1, [0.25, 1.0], {"a": 1}, ("x", 2))],
+        "vec_id long, embedding array<double>, m map<string,int>,"
+        " s struct<t:string,n:int>",
+    )
+    # "1" + "[0.25, 1.0]" + "{a -> 1}" + "{x, 2}"
+    assert dataset_bytes(df, tuple(df.columns)) == 1 + 11 + 8 + 6
+    cache = cache_for_training(df.select("vec_id", "embedding"), str(tmp_path / "c"))
+    back = cache.read(spark).collect()
+    assert [(r.vec_id, r.embedding) for r in back] == [(1, [0.25, 1.0])]
 
 
 def test_write_row_grouped_parquet_roundtrip(content_df, tmp_path):
