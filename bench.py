@@ -14,7 +14,9 @@ tail capture always parses it (BENCH_r03 lesson):
 The full per-query map is ALSO persisted to BENCH_DETAIL.json plus a
 round-stamped copy named by ``detail_file`` (r12 verdict item 1: stdout
 tail captures lose the big detail line, so per-query attribution must
-come from disk).
+come from disk). The round comes from $SPARK_GRAFT_ROUND; when it is
+unset, a warning goes to stderr, no round-stamped copy is written and
+``detail_file`` names BENCH_DETAIL.json.
 
 Per-query time = wall time of the noop-sink write of the query's plan,
 min over SPARK_GRAFT_BENCH_REPEATS runs (default 3 — stall-robust on
@@ -279,12 +281,13 @@ def _sf_from_dir(sf_dir: str) -> float:
     return float(m.group(1)) if m else -1.0
 
 
-# Current round number for the round-stamped detail copy.  Bumped each
-# round (or overridden via SPARK_GRAFT_ROUND) so the driver can diff
-# per-query detail across ITS OWN runs: the r12 PERF pipeline lost all
-# per-query attribution because the big detail line only survives
-# stdout as a 2000-char tail (PERF_r12 per_query == {}).
-_ROUND = os.environ.get("SPARK_GRAFT_ROUND", "13")
+# Round number for the round-stamped detail copy, so per-query detail
+# can be diffed across rounds: the r12 PERF pipeline lost all per-query
+# attribution because the big detail line only survives stdout as a
+# 2000-char tail (PERF_r12 per_query == {}). There is no default: a run
+# without SPARK_GRAFT_ROUND writes no round-stamped file, so it can never
+# overwrite a committed round's artifact.
+_ROUND = os.environ.get("SPARK_GRAFT_ROUND") or None
 
 
 def _finish(detail: dict, total: float) -> None:
@@ -313,11 +316,19 @@ def _finish(detail: dict, total: float) -> None:
     # 8-core run no longer overwrites the 32-core detail, so round N
     # and N+1 detail can be diffed per core count even when only the
     # working tree is inspected.
-    round_path = os.path.join(
-        os.path.dirname(detail_path), f"BENCH_DETAIL_r{_ROUND}_c{cpus}.json"
-    )
-    with open(round_path, "w") as fh:
-        json.dump(payload, fh, indent=1, sort_keys=True)
+    if _ROUND is None:
+        print(
+            "bench.py: SPARK_GRAFT_ROUND is unset; writing no round-stamped "
+            f"detail file (detail_file is {os.path.basename(detail_path)})",
+            file=sys.stderr,
+        )
+        round_path = detail_path
+    else:
+        round_path = os.path.join(
+            os.path.dirname(detail_path), f"BENCH_DETAIL_r{_ROUND}_c{cpus}.json"
+        )
+        with open(round_path, "w") as fh:
+            json.dump(payload, fh, indent=1, sort_keys=True)
     print(
         json.dumps(
             {

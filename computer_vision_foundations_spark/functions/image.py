@@ -520,7 +520,13 @@ def with_image_metadata_statistics(
     ``get_image_metadata_statistics``). Marked non-deterministic so
     projection collapse cannot duplicate the evaluation when the two
     struct fields are split back out (guide §4.4 — the same physical
-    results either way; the flag only pins ONE Python pass)."""
+    results either way; the flag only pins ONE Python pass).
+
+    Use it only when both structs are consumed. The non-deterministic
+    flag also stops filter pushdown and column pruning through the UDF,
+    so a consumer that selects just one struct still pays for both
+    computations and the full Arrow transfer; such consumers should call
+    ``with_image_metadata`` or ``with_image_statistics`` instead."""
     fused = get_image_metadata_statistics.asNondeterministic()
     return (
         df.withColumn("_ms", fused(F.col(content_col)))

@@ -36,10 +36,17 @@ ids, so each component's id IS its canonical (smallest) member.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 __all__ = ["connected_components", "dedup_clusters"]
+
+# Serializes the AQE read-set-restore in `_ckpt_partitioned`: two
+# threads interleaving it would each restore what the other set, and
+# leave AQE off for the whole session.
+_AQE_TOGGLE_LOCK = threading.Lock()
 
 
 def _ckpt_partitioned(df: DataFrame, *keys: str) -> DataFrame:
@@ -56,17 +63,19 @@ def _ckpt_partitioned(df: DataFrame, *keys: str) -> DataFrame:
     is still ``UnknownPartitioning`` (measured: the checkpointed scan
     reports UnknownPartitioning(0) with AQE on, hashpartitioning(key)
     with it off). AQE is disabled ONLY while this checkpoint plan is
-    constructed+run; it is a perf-only toggle, so a concurrent job
-    planned in the window at most loses adaptive coalescing for that
-    one plan."""
+    constructed+run, under ``_AQE_TOGGLE_LOCK`` so concurrent callers
+    restore the value read before any of them toggled it. It is a
+    perf-only toggle, so an unrelated job planned in the window at most
+    loses adaptive coalescing for that one plan."""
     spark = df.sparkSession
     key = "spark.sql.adaptive.enabled"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try:
-        return df.repartition(*[F.col(k) for k in keys]).localCheckpoint()
-    finally:
-        spark.conf.set(key, old)
+    with _AQE_TOGGLE_LOCK:
+        old = spark.conf.get(key)
+        spark.conf.set(key, "false")
+        try:
+            return df.repartition(*[F.col(k) for k in keys]).localCheckpoint()
+        finally:
+            spark.conf.set(key, old)
 
 
 def _ckpt_rdd(df: DataFrame):
