@@ -82,7 +82,8 @@ from computer_vision_foundations_spark.operators.mixture import (
     top_fraction_per_group,
 )
 from computer_vision_foundations_spark.operators.score import score_with
-from computer_vision_foundations_spark.operators.skew import salted_join, skew_profile
+from computer_vision_foundations_spark.operators.skew import skew_profile
+from computer_vision_foundations_spark.operators.skewjoin import salted_join
 from computer_vision_foundations_spark.operators.asof import as_of_join
 from computer_vision_foundations_spark.operators.ranges import (
     interval_overlap_join,

@@ -154,15 +154,14 @@ def chunk_dedup_stats(
     without the broadcast the semi-join re-shuffles + re-sorts the
     full chunk stream by hash. Flip off beyond ~5·10^7 shared hashes;
     results are join-strategy independent either way."""
-    from pyspark import StorageLevel
-
-    chunks = content_chunks(df, text_col, id_col, w, modulus, repartition_to)
     # three consumers (shared-hash agg, semi-join probe, totals) — one
     # boundary-UDF pass, not three; rows are (id, idx, start, len,
-    # hash16), tiny. Eager count: consumers inside one job race the
-    # cache population (the minhash_lsh lesson).
-    chunks = chunks.persist(StorageLevel.MEMORY_AND_DISK)
-    chunks.count()
+    # hash16), tiny. One eager localCheckpoint job (the near-dup
+    # family's discipline, dedup._capped_buckets): its blocks are freed
+    # once the result is unreachable.
+    chunks = content_chunks(
+        df, text_col, id_col, w, modulus, repartition_to
+    ).localCheckpoint()
     shared = (
         chunks.groupBy("chunk_hash")
         .agg(F.count_distinct(id_col).alias("_docs"))

@@ -27,9 +27,13 @@ beyond-reference LLM-pipeline surface.
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from computer_vision_foundations_spark.operators.dedup import (
+    _bucket_pairs,
+    _capped_buckets,
+)
 
 __all__ = ["item_cosine_pairs", "item_cosine_oracle_sql"]
 
@@ -50,44 +54,29 @@ def item_cosine_pairs(
     (cap ON by default — pass ``None`` only when the basket-size
     distribution is known bounded).
 
-    r13 shape fixes (this operator predated the persist-once
-    discipline and was off the bench when r12 swept for it):
-
-    - the capped distinct (basket, item) relation is built in ONE
-      pass — the size cap is a count window over the same _bk
-      partitioning instead of a groupBy+self-join — and persisted
-      with an eager count; previously the upstream join+distinct
-      pipeline re-ran for the size table, the cap join, the norms and
-      BOTH self-join sides (~5 upstream replays, guide §2.4/§5).
-    - ``broadcast_norms`` broadcasts the per-item basket-count table
-      into the two final joins (16-byte rows, the graph operators'
-      ~1e8-item contract; flip off beyond): the cooc pair stream is
-      joined map-side instead of being re-shuffled twice by item id
-      (guide §3.1). Counts are integers — join-strategy independent.
+    Shape: the distinct (basket, item) relation is built once and
+    shared with the near-dup family's candidate step
+    (``dedup._capped_buckets``: one eager ``localCheckpoint`` job, then
+    baskets above the cap leave through a broadcast anti-join), so the
+    upstream join+distinct pipeline does not re-run for the norms and
+    both self-join sides; the within-basket pairs come from the same
+    bucket self-join (``dedup._bucket_pairs``).
+    ``broadcast_norms`` broadcasts the per-item basket-count table
+    into the two final joins (16-byte rows, the graph operators'
+    ~1e8-item contract; flip off beyond): the cooc pair stream is
+    joined map-side instead of being re-shuffled twice by item id
+    (guide §3.1). Counts are integers — join-strategy independent.
     """
     b = df.select(
         F.col(basket_col).alias("_bk"), F.col(item_col).alias("_it")
     ).distinct()
-    if max_basket_size is not None:
-        b = (
-            b.withColumn(
-                "_sz",
-                F.count(F.lit(1)).over(Window.partitionBy("_bk")),
-            )
-            .filter(F.col("_sz") <= max_basket_size)
-            .drop("_sz")
-        )
-    b = b.persist(StorageLevel.MEMORY_AND_DISK)
-    b.count()
+    b = _capped_buckets(b, ["_bk"], max_basket_size)
     norms = b.groupBy("_it").agg(F.count("*").alias("_n"))
     if broadcast_norms:
         norms = F.broadcast(norms)
-    left = b.select(F.col("_bk"), F.col("_it").alias("item_a"))
-    right = b.select(F.col("_bk"), F.col("_it").alias("item_b"))
     pairs = (
-        left.join(right, "_bk")
-        .filter(F.col("item_a") < F.col("item_b"))
-        .groupBy("item_a", "item_b")
+        _bucket_pairs(b, ["_bk"], "_it")
+        .groupBy(F.col("id_a").alias("item_a"), F.col("id_b").alias("item_b"))
         .agg(F.count("*").alias("cooc"))
         .filter(F.col("cooc") >= min_cooc)
     )

@@ -25,11 +25,19 @@ never collect to the driver:
 - embedding:    cosine over ``array<float>`` with a blocking column to
                 bound the pair count (all-pairs within a block); at
                 100 TB block on an LSH bucket / coarse quantizer id.
+
+Every pair generator (n-gram, containment, winnowing, MinHash LSH,
+SimHash bands, incremental LSH, and ``ppjoin``/``cf`` outside this
+module) shares one candidate step: ``_capped_buckets`` materializes the
+bucketed rows with ``localCheckpoint`` and drops keys hotter than the
+cap, then ``_bucket_pairs`` self-joins inside each bucket. A local
+checkpoint's blocks are freed by Spark's ContextCleaner once the result
+is unreachable; a ``Dataset.persist`` would stay in the CacheManager for
+the life of the session.
 """
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -119,6 +127,106 @@ def _tokenized(
     )
 
 
+def _capped_buckets(
+    rows: DataFrame, keys: list[str], cap: int | None
+) -> DataFrame:
+    """``rows`` materialized once, minus every bucket of more than
+    ``cap`` rows (``None``: keep all).
+
+    The bucketed rows feed several consumers (the bucket-size
+    aggregate and both self-join sides), so the upstream pipeline is
+    run by ONE eager ``localCheckpoint`` job; consumers inside a later
+    job would otherwise race a lazy cache and recompute it (measured
+    91 s → ~10 s on MinHash LSH). Its blocks belong to the returned
+    frame and are freed once the result is unreachable. The hot-key
+    set is at most ``|rows| / cap`` keys, so it is removed with a
+    broadcast anti-join — no extra shuffle of the rows."""
+    rows = rows.localCheckpoint()
+    if cap is None:
+        return rows
+    hot = (
+        rows.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("_n"))
+        .filter(F.col("_n") > cap)
+        .select(*keys)
+    )
+    return rows.join(F.broadcast(hot), keys, "left_anti")
+
+
+def _bucket_pairs(
+    buckets: DataFrame,
+    keys: list[str],
+    id_col: str,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """``(id_a, id_b, <c>_a…, <c>_b…)`` for every two rows that share a
+    bucket, ``id_a < id_b``: the self-equi-join on ``keys``, carrying
+    each ``carry`` column from both sides. A pair sharing n buckets is
+    emitted n times — count it or take ``distinct``."""
+
+    def side(s: str) -> DataFrame:
+        return buckets.select(
+            F.col(id_col).alias(f"id_{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in carry],
+            *keys,
+        )
+
+    return (
+        side("a")
+        .join(side("b"), keys)
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select(
+            "id_a",
+            "id_b",
+            *[f"{c}_a" for c in carry],
+            *[f"{c}_b" for c in carry],
+        )
+    )
+
+
+def _shared_key_counts(
+    exploded: DataFrame, key: str, cap: int | None
+) -> DataFrame:
+    """``(id_a, id_b, _size_a, _size_b, common)`` from an exploded
+    ``(_id, _size, key)`` stream of distinct keys per id: how many
+    keys each pair shares. Keys held by more than ``cap`` ids are
+    dropped, but ``_size`` still counts them, so a score over the
+    sizes stays exact for every surviving pair."""
+    return (
+        _bucket_pairs(
+            _capped_buckets(exploded, [key], cap), [key], "_id", ("_size",)
+        )
+        .groupBy("id_a", "id_b", "_size_a", "_size_b")
+        .agg(F.count(F.lit(1)).alias("common"))
+    )
+
+
+def _shingle_counts(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    k: int,
+    cap: int | None,
+    repartition_to: int | None,
+) -> DataFrame:
+    """``_shared_key_counts`` over each doc's distinct word k-grams."""
+    shingled = _with_shingles(df, text_col, id_col, "_id", k, repartition_to)
+    exploded = shingled.select(
+        "_id",
+        F.size("_shingles").alias("_size"),
+        F.explode("_shingles").alias("_shingle"),
+    )
+    return _shared_key_counts(exploded, "_shingle", cap)
+
+
+def _check_bands(width: int, bands: int, what: str) -> int:
+    """Rows per band; ``bands`` must divide ``width`` exactly, or the
+    trailing hashes would be silently ignored."""
+    if bands < 1 or width % bands:
+        raise ValueError(f"bands={bands} must divide {what}={width}")
+    return width // bands
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -146,50 +254,14 @@ def ngram_jaccard_pairs(
     it is removed with a broadcast anti-join — no extra shuffle of the
     exploded stream.
     """
-    shingled = _with_shingles(
-        df, text_col, id_col, "_id", k, repartition_to
-    ).withColumn("_size", F.size("_shingles"))
-
-    exploded = shingled.select(
-        "_id", "_size", F.explode("_shingles").alias("_shingle")
+    counts = _shingle_counts(
+        df, text_col, id_col, k, max_shingle_freq, repartition_to
     )
-    # Three consumers of the exploded shingle stream (freq agg + both
-    # join sides) — persist so scan+shingle runs once, not 3×. Spills
-    # to disk; disk re-read beats re-shingling the corpus. The count()
-    # materializes the cache EAGERLY: multiple consumers inside one job
-    # race cache population and each recomputes the expensive
-    # shingle pipeline otherwise (measured 3-10× on the LSH twin).
-    exploded = exploded.persist(StorageLevel.MEMORY_AND_DISK)
-    exploded.count()
-    if max_shingle_freq is not None:
-        hot = (
-            exploded.groupBy("_shingle")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") > max_shingle_freq)
-            .select("_shingle")
-        )
-        exploded = exploded.join(F.broadcast(hot), "_shingle", "left_anti")
-
-    a = exploded.select(
-        F.col("_id").alias("id_a"), F.col("_size").alias("size_a"), "_shingle"
+    union = F.col("_size_a") + F.col("_size_b") - F.col("common")
+    jaccard = F.col("common").cast("double") / union.cast("double")
+    return counts.filter(jaccard >= F.lit(threshold)).select(
+        "id_a", "id_b", F.round(jaccard, 6).alias("jaccard")
     )
-    b = exploded.select(
-        F.col("_id").alias("id_b"), F.col("_size").alias("size_b"), "_shingle"
-    )
-    pairs = (
-        a.join(b, "_shingle")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b", "size_a", "size_b")
-        .agg(F.count(F.lit(1)).alias("common"))
-        .withColumn(
-            "jaccard",
-            F.col("common").cast("double")
-            / (F.col("size_a") + F.col("size_b") - F.col("common")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= F.lit(threshold))
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-    )
-    return pairs
 
 
 def containment_pairs(
@@ -221,52 +293,21 @@ def containment_pairs(
     fan-out while dropped shingles still count in the denominators,
     so scores for surviving pairs are exact.
     """
-    shingled = _with_shingles(
-        df, text_col, id_col, "_id", k, repartition_to
-    ).withColumn("_size", F.size("_shingles"))
-
-    exploded = shingled.select(
-        "_id", "_size", F.explode("_shingles").alias("_shingle")
-    )
-    exploded = exploded.persist(StorageLevel.MEMORY_AND_DISK)
-    exploded.count()
-    if max_shingle_freq is not None:
-        hot = (
-            exploded.groupBy("_shingle")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") > max_shingle_freq)
-            .select("_shingle")
-        )
-        exploded = exploded.join(F.broadcast(hot), "_shingle", "left_anti")
-
-    a = exploded.select(
-        F.col("_id").alias("id_a"), F.col("_size").alias("size_a"), "_shingle"
-    )
-    b = exploded.select(
-        F.col("_id").alias("id_b"), F.col("_size").alias("size_b"), "_shingle"
+    counts = _shingle_counts(
+        df, text_col, id_col, k, max_shingle_freq, repartition_to
     )
     common = F.col("common").cast("double")
-    return (
-        a.join(b, "_shingle")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b", "size_a", "size_b")
-        .agg(F.count(F.lit(1)).alias("common"))
-        .withColumn(
-            "overlap",
-            common / F.least(F.col("size_a"), F.col("size_b")).cast("double"),
-        )
-        .filter(F.col("overlap") >= F.lit(threshold))
-        .select(
-            "id_a",
-            "id_b",
-            F.round("overlap", 6).alias("overlap"),
-            F.round(common / F.col("size_a").cast("double"), 6).alias(
-                "containment_a"
-            ),
-            F.round(common / F.col("size_b").cast("double"), 6).alias(
-                "containment_b"
-            ),
-        )
+    overlap = common / F.least("_size_a", "_size_b").cast("double")
+    return counts.filter(overlap >= F.lit(threshold)).select(
+        "id_a",
+        "id_b",
+        F.round(overlap, 6).alias("overlap"),
+        F.round(common / F.col("_size_a").cast("double"), 6).alias(
+            "containment_a"
+        ),
+        F.round(common / F.col("_size_b").cast("double"), 6).alias(
+            "containment_b"
+        ),
     )
 
 
@@ -350,7 +391,8 @@ def minhash_lsh_candidate_pairs(
 ) -> DataFrame:
     """LSH banding: pairs agreeing on ≥1 full band of the signature.
 
-    ``n_hashes`` must divide into ``bands`` equal rows. Each doc emits
+    ``n_hashes`` must divide into ``bands`` equal rows (``ValueError``
+    otherwise). Each doc emits
     ``bands`` (band_idx, band_key) rows; candidates are an equi-join on
     the band key — linear in docs + join fan-out on genuinely similar
     buckets, never quadratic across buckets. Output: distinct
@@ -368,8 +410,7 @@ def minhash_lsh_candidate_pairs(
     (``_minhash_wide``), so nothing re-derives the signature array
     per band.
     """
-    assert n_hashes % bands == 0, "bands must divide n_hashes"
-    rows_per_band = n_hashes // bands
+    rows_per_band = _check_bands(n_hashes, bands, "n_hashes")
     wide = _minhash_wide(df, text_col, id_col, k, n_hashes, hash_fn, repartition_to)
     band_arr = F.array(
         *[
@@ -386,33 +427,9 @@ def minhash_lsh_candidate_pairs(
     banded = wide.select(
         "doc_id", F.posexplode(band_arr).alias("band_idx", "band_key")
     )
-    # Three consumers (bucket-size agg + both self-join sides): persist
-    # the banded keys — tiny rows (id, idx, key) — so the full
-    # scan→shingle→hash→agg pipeline runs once, not 3×. Eager count()
-    # because consumers inside one job race the cache population and
-    # recompute upstream (measured 91s → ~10s on this operator).
-    banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
-    banded.count()
-    if max_bucket_size is not None:
-        hot = (
-            banded.groupBy("band_idx", "band_key")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") > max_bucket_size)
-            .select("band_idx", "band_key")
-        )
-        banded = banded.join(
-            F.broadcast(hot), ["band_idx", "band_key"], "left_anti"
-        )
-    a = banded.select(
-        F.col("doc_id").alias("id_a"), "band_idx", "band_key"
-    )
-    b = banded.select(
-        F.col("doc_id").alias("id_b"), "band_idx", "band_key"
-    )
+    keys = ["band_idx", "band_key"]
     return (
-        a.join(b, ["band_idx", "band_key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
+        _bucket_pairs(_capped_buckets(banded, keys, max_bucket_size), keys, "doc_id")
         .distinct()
     )
 
@@ -497,7 +514,8 @@ def simhash_pairs(
     ``(id_a, id_b, hamming)`` with ``hamming <= max_hamming``.
 
     The Hamming-LSH pigeonhole: split the ``bits``-wide fingerprint
-    into ``bands`` equal slices — two hashes within Hamming distance
+    into ``bands`` equal slices (``ValueError`` unless ``bands``
+    divides ``bits``) — two hashes within Hamming distance
     ``bands - 1`` MUST agree on at least one slice, so the candidate
     join is an equi-join on (band_idx, band_val), never all-pairs
     (``max_hamming < bands`` keeps the guarantee exact; beyond it the
@@ -523,15 +541,15 @@ def simhash_pairs(
 
     Works on either hash family's fingerprints (the md5-portable one
     is oracle-checkable)."""
-    assert bits % bands == 0, "bands must divide bits"
-    width = bits // bands
+    width = _check_bands(bits, bands, "bits")
     mask = (1 << width) - 1
     # (id, fingerprint) is consumed by the distinct-fp aggregate and by
-    # both member-expansion joins — persist so the upstream fingerprint
-    # computation (typically a full tokenize+hash pipeline) runs once.
-    members = df.select(F.col(id_col).alias("_id"), F.col(simhash_col).alias("_fp"))
-    members = members.persist(StorageLevel.MEMORY_AND_DISK)
-    members.count()  # eager: consumers inside one job race cache population
+    # both member-expansion joins — checkpoint it so the upstream
+    # fingerprint computation (typically a full tokenize+hash pipeline)
+    # runs once, in one eager job (see ``_capped_buckets``).
+    members = df.select(
+        F.col(id_col).alias("_id"), F.col(simhash_col).alias("_fp")
+    ).localCheckpoint()
     fps = members.select("_fp").distinct()
 
     # 1. hamming-0 pairs within each identical-fingerprint group.
@@ -603,21 +621,11 @@ def simhash_pairs(
         ]
     )
     banded = fps.select("_fp", F.posexplode(slices).alias("band_idx", "band_val"))
-    if max_band_freq is not None:
-        hot = (
-            banded.groupBy("band_idx", "band_val")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") > max_band_freq)
-            .select("band_idx", "band_val")
-        )
-        banded = banded.join(F.broadcast(hot), ["band_idx", "band_val"], "left_anti")
-    fa = banded.select(F.col("_fp").alias("_fa"), "band_idx", "band_val")
-    fb = banded.select(F.col("_fp").alias("_fb"), "band_idx", "band_val")
+    keys = ["band_idx", "band_val"]
     ham = F.bit_count(F.col("_fa").bitwiseXOR(F.col("_fb"))).cast("int")
     fp_pairs = (
-        fa.join(fb, ["band_idx", "band_val"])
-        .filter(F.col("_fa") < F.col("_fb"))
-        .select("_fa", "_fb")
+        _bucket_pairs(_capped_buckets(banded, keys, max_band_freq), keys, "_fp")
+        .select(F.col("id_a").alias("_fa"), F.col("id_b").alias("_fb"))
         .distinct()
         .withColumn("hamming", ham)
         .filter(F.col("hamming") <= max_hamming)
@@ -742,40 +750,20 @@ def winnow_near_duplicates(
     fps = df.select(
         F.col(id_col).alias("_id"),
         winnow_udf(k, w)(F.col(text_col)).alias("_fps"),
-    ).withColumn("_size", F.size("_fps"))
-    exploded = fps.select("_id", "_size", F.explode("_fps").alias("_fp"))
-    exploded = exploded.persist(StorageLevel.MEMORY_AND_DISK)
-    exploded.count()  # eager: 3 consumers race cache population otherwise
-    if max_fingerprint_freq is not None:
-        hot = (
-            exploded.groupBy("_fp")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") > max_fingerprint_freq)
-            .select("_fp")
-        )
-        exploded = exploded.join(F.broadcast(hot), "_fp", "left_anti")
-    a = exploded.select(
-        F.col("_id").alias("id_a"), F.col("_size").alias("size_a"), "_fp"
     )
-    b = exploded.select(
-        F.col("_id").alias("id_b"), F.col("_size").alias("size_b"), "_fp"
+    exploded = fps.select(
+        "_id", F.size("_fps").alias("_size"), F.explode("_fps").alias("_fp")
     )
-    return (
-        a.join(b, "_fp")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b", "size_a", "size_b")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
-        .select(
-            "id_a",
-            "id_b",
-            "n_shared",
-            F.round(
-                F.col("n_shared").cast("double")
-                / (F.col("size_a") + F.col("size_b") - F.col("n_shared")),
-                6,
-            ).alias("resemblance"),
-        )
+    shared = _shared_key_counts(exploded, "_fp", max_fingerprint_freq)
+    return shared.filter(F.col("common") >= min_shared).select(
+        "id_a",
+        "id_b",
+        F.col("common").alias("n_shared"),
+        F.round(
+            F.col("common").cast("double")
+            / (F.col("_size_a") + F.col("_size_b") - F.col("common")),
+            6,
+        ).alias("resemblance"),
     )
 
 
@@ -937,7 +925,7 @@ def incremental_lsh_candidates(
     form. ``n_hashes``/``bands``/``k``/``hash_fn`` must match the
     snapshot's build parameters (enforce by storing them with the
     index)."""
-    assert n_hashes % bands == 0, "bands must divide n_hashes"
+    _check_bands(n_hashes, bands, "n_hashes")
     batch_sigs = minhash_signatures(
         new_df, text_col, id_col, k, n_hashes, hash_fn, repartition_to
     )
@@ -949,18 +937,9 @@ def incremental_lsh_candidates(
         F.col(id_col).alias("_id"), "band_idx", "band_key",
         F.lit("snapshot").alias("_side"),
     )
-    all_b = batch_b.unionByName(snap_b).persist(StorageLevel.MEMORY_AND_DISK)
-    all_b.count()  # eager: bucket-cap agg + join probe both read it
-    if max_bucket_size is not None:
-        hot = (
-            all_b.groupBy("band_idx", "band_key")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") > max_bucket_size)
-            .select("band_idx", "band_key")
-        )
-        all_b = all_b.join(
-            F.broadcast(hot), ["band_idx", "band_key"], "left_anti"
-        )
+    all_b = _capped_buckets(
+        batch_b.unionByName(snap_b), ["band_idx", "band_key"], max_bucket_size
+    )
     probe = all_b.filter(F.col("_side") == "batch").select(
         F.col("_id").alias("batch_id"), "band_idx", "band_key"
     )

@@ -38,7 +38,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from computer_vision_foundations_spark.operators.dedup import _with_shingles
+from computer_vision_foundations_spark.operators.dedup import (
+    _bucket_pairs,
+    _with_shingles,
+)
 
 __all__ = ["prefix_jaccard_pairs", "prefix_jaccard_oracle_sql"]
 
@@ -54,14 +57,14 @@ def prefix_jaccard_pairs(
     """``(id_a, id_b, jaccard)`` with id_a < id_b and jaccard ≥
     threshold, rounded 6 — exact, via prefix filtering."""
     t = float(threshold)
-    shingled = _with_shingles(
-        df, text_col, id_col, "_id", k, repartition_to
-    ).withColumn("_size", F.size("_shingles"))
-    # Three consumers (freq agg, prefix stream, verify arrays): persist
-    # so tokenize+shingle runs once. Eager count for the same
-    # cache-race reason as ngram_jaccard_pairs.
-    shingled = shingled.persist()
-    shingled.count()
+    # Three consumers (freq agg, prefix stream, verify arrays): one
+    # eager checkpoint job runs tokenize+shingle once (the
+    # ``_capped_buckets`` discipline).
+    shingled = (
+        _with_shingles(df, text_col, id_col, "_id", k, repartition_to)
+        .withColumn("_size", F.size("_shingles"))
+        .localCheckpoint()
+    )
 
     exploded = shingled.select(
         "_id", "_size", F.explode("_shingles").alias("_shingle")
@@ -86,19 +89,12 @@ def prefix_jaccard_pairs(
         .select("_id", "_size", "_shingle")
     )
 
-    a = prefix.select(
-        F.col("_id").alias("id_a"), F.col("_size").alias("sa"), "_shingle"
-    )
-    b = prefix.select(
-        F.col("_id").alias("id_b"), F.col("_size").alias("sb"), "_shingle"
-    )
     cands = (
-        a.join(b, "_shingle")
+        _bucket_pairs(prefix, ["_shingle"], "_id", ("_size",))
         .filter(
-            (F.col("id_a") < F.col("id_b"))
             # PPJoin length filter: J ≥ t ⇒ t·|A| ≤ |B| (and symm.)
-            & (F.col("sb") >= F.lit(t) * F.col("sa"))
-            & (F.col("sa") >= F.lit(t) * F.col("sb"))
+            (F.col("_size_b") >= F.lit(t) * F.col("_size_a"))
+            & (F.col("_size_a") >= F.lit(t) * F.col("_size_b"))
         )
         .select("id_a", "id_b")
         .distinct()

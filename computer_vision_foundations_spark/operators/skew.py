@@ -1,52 +1,14 @@
-"""Skew-mitigation utilities: salted joins for heavy-hitter keys.
+"""Skew diagnostics: which keys are heavy enough to need mitigation.
 
 AQE's skew-join splitting (on by default in session.py) handles most
 skew by splitting oversized partitions at runtime, but it only works
 for sort-merge joins and after a shuffle has already materialized the
-skew. Salting restructures the join itself: the skewed side gets a
-random salt in [0, n), the other side is replicated n ways, and the
-join key becomes (key, salt) — a single hot key now lands on n
-reducers instead of one. Classic tradeoff: n× replication of the
-small side's matching rows buys n× parallelism on the hot keys.
+skew. :func:`skew_profile` finds the hot keys before the join, for
+deciding whether to restructure it with the deterministic salted join
+(:func:`~computer_vision_foundations_spark.operators.skewjoin.salted_join`).
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-
-def salted_join(
-    skewed: DataFrame,
-    other: DataFrame,
-    on: list[str] | str,
-    n_salts: int = 16,
-    how: str = "inner",
-    seed: int = 42,
-) -> DataFrame:
-    """Join with the SKEWED side salted and ``other`` replicated.
-
-    Result is row-identical to ``skewed.join(other, on, how)`` — the
-    salt only changes data distribution. ``how`` supports the joins
-    that preserve the skewed side's rows ('inner', 'left'); for a
-    right/outer join swap the arguments. ``other`` is replicated
-    ``n_salts``× — keep it the smaller input (if it were broadcast-able
-    you wouldn't salt at all; this is for the mid-size case where both
-    sides shuffle).
-    """
-    if how not in ("inner", "left"):
-        raise ValueError(
-            "salted_join preserves the skewed side; use how='inner' or "
-            "'left' (swap inputs for right joins)"
-        )
-    keys = [on] if isinstance(on, str) else list(on)
-    salted = skewed.withColumn(
-        "_salt", (F.rand(seed) * n_salts).cast("int")
-    )
-    replicated = other.withColumn(
-        "_salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
-    )
-    return salted.join(replicated, on=keys + ["_salt"], how=how).drop("_salt")
 
 
 def skew_profile(
@@ -54,8 +16,8 @@ def skew_profile(
 ):
     """``(key, n_rows, share, suggested_salt)`` for the ``top_n``
     heaviest keys — the diagnostic you run BEFORE a big join/agg to
-    decide whether :func:`salted_join` (or AQE skew handling) is
-    needed. ``share`` is the key's fraction of all rows;
+    decide whether ``skewjoin.salted_join`` (or AQE skew handling)
+    is needed. ``share`` is the key's fraction of all rows;
     ``suggested_salt`` is ``ceil(n_rows / salt_target)`` (1 when the
     key already fits the target, ``salt_target`` defaulting to the
     mean rows-per-key). One hash aggregate + a TakeOrdered top-n;

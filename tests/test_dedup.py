@@ -1,5 +1,6 @@
 """Dedup-operator properties (SURVEY §2.10 north-star extensions)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from computer_vision_foundations_spark.operators.dedup import (
@@ -63,6 +64,9 @@ def test_lsh_candidates_include_duplicates(spark):
     }
     assert (1, 2) in cands  # identical docs always collide in every band
     assert (1, 4) not in cands
+    # 16 hashes in 5 bands would silently drop the 16th hash
+    with pytest.raises(ValueError, match="must divide"):
+        minhash_lsh_candidate_pairs(_docs(spark), n_hashes=16, bands=5)
 
 
 def test_simhash_identical_and_distinct(spark):
@@ -277,6 +281,8 @@ def test_simhash_pairs_pigeonhole_exact(spark):
             want[(min(ia, ib), max(ia, ib))] = d
     assert got == want
     assert got[(1, 5)] == 0 and got[(1, 2)] == 1
+    with pytest.raises(ValueError, match="must divide"):
+        simhash_pairs(df, bits=16, bands=5)
 
 def test_embedding_near_duplicates_cartesian_requires_opt_in(spark):
     """block_col=None plans an O(n²) cross product — hard error unless
@@ -435,6 +441,8 @@ def test_incremental_lsh_candidates_flow(spark):
     assert not any(r.batch_id == 13 for r in out)
     # batch pairs are ordered batch_id < match_id, no self matches
     assert all(r.batch_id < r.match_id for r in out if r.origin == "batch")
+    with pytest.raises(ValueError, match="must divide"):
+        incremental_lsh_candidates(new, snap, n_hashes=8, bands=3)
 
 
 def test_incremental_lsh_bucket_cap(spark):

@@ -191,40 +191,6 @@ def test_bucketed_tables_join_without_shuffle(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS bk_right")
 
 
-def test_salted_join_matches_plain_join(spark):
-    """salted_join is row-identical to the plain join; the salt only
-    respreads hot keys."""
-    from computer_vision_foundations_spark.operators.skew import salted_join
-
-    # key 7 is a heavy hitter
-    skewed = spark.range(0, 2000).select(
-        F.when(F.col("id") < 1500, F.lit(7)).otherwise(F.col("id") % 50)
-        .alias("k"),
-        F.col("id").alias("row_id"),
-    )
-    dim = spark.range(0, 50).select(
-        F.col("id").alias("k"), (F.col("id") * 10).alias("attr")
-    )
-    plain = skewed.join(dim, "k").select("row_id", "attr")
-    salted = salted_join(skewed, dim, "k", n_salts=8).select("row_id", "attr")
-    assert plain.exceptAll(salted).count() == 0
-    assert salted.exceptAll(plain).count() == 0
-
-    left_plain = skewed.join(dim.filter("k < 10"), "k", "left").select(
-        "row_id", "attr"
-    )
-    left_salted = salted_join(
-        skewed, dim.filter("k < 10"), "k", how="left", n_salts=8
-    ).select("row_id", "attr")
-    assert left_plain.exceptAll(left_salted).count() == 0
-    assert left_salted.exceptAll(left_plain).count() == 0
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        salted_join(skewed, dim, "k", how="right")
-
-
 def test_compact_parquet_dir(spark, tmp_path):
     import os
 
