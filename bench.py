@@ -762,9 +762,9 @@ def main() -> int:
             df.write.mode("overwrite").format("noop").save()
             samples.append(round(time.time() - t0, 3))
             # Per-query isolation: some operators persist intermediates
-            # (span occurrences, basket items) that only their own plan
-            # consumes; dropping them here keeps later queries from
-            # paying earlier queries' block-eviction and GC pressure.
+            # (the corpus stages) that only their own plan consumes;
+            # dropping them here keeps later queries from paying
+            # earlier queries' block-eviction and GC pressure.
             spark.catalog.clearCache()
             if min(samples) < retry_sec:
                 break

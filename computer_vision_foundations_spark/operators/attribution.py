@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from computer_vision_foundations_spark.operators._iterative import Rounds
+
 __all__ = ["markov_attribution", "attribution_oracle_sql"]
 
 _START, _CONV, _NULL = "__start", "__conv", "__null"
@@ -105,127 +107,126 @@ def markov_attribution(
     """``(channel, reach_without, removal_effect, attribution)`` —
     base reach is carried on every row as ``base_reach``. Floats
     rounded 6."""
-    edges = _journey_edges(
-        events, user_col, ts_col, channel_col, convert_value, tiebreak_col
-    )
-    trans = (
-        edges.groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .withColumn(
-            "p",
-            F.col("n")
-            / F.sum("n").over(Window.partitionBy("src")).cast("double"),
+    with Rounds() as rounds:
+        edges = _journey_edges(
+            events, user_col, ts_col, channel_col, convert_value, tiebreak_col
         )
-        .select("src", "dst", "p")
-        .localCheckpoint()
-    )
-    channels = (
-        trans.select(F.col("src").alias("ch"))
-        .where(~F.col("ch").isin(_START, _CONV, _NULL))
-        .distinct()
-    )
-    scenarios = channels.select(
-        F.col("ch").alias("scenario")
-    ).unionByName(
-        channels.sparkSession.createDataFrame(
-            [("__base",)], "scenario string"
-        )
-    )
-    # scenario-adjusted transitions: drop rows FROM the removed
-    # channel; retarget rows INTO it to NULL (then re-merge p mass)
-    st = (
-        scenarios.crossJoin(trans)
-        .where(
-            (F.col("scenario") == "__base")
-            | (F.col("src") != F.col("scenario"))
-        )
-        .select(
-            "scenario",
-            "src",
-            F.when(
-                (F.col("scenario") != "__base")
-                & (F.col("dst") == F.col("scenario")),
-                F.lit(_NULL),
+        trans = rounds.checkpoint(
+            edges.groupBy("src", "dst")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .withColumn(
+                "p",
+                F.col("n")
+                / F.sum("n").over(Window.partitionBy("src")).cast("double"),
             )
-            .otherwise(F.col("dst"))
-            .alias("dst"),
-            "p",
+            .select("src", "dst", "p")
         )
-        .groupBy("scenario", "src", "dst")
-        .agg(F.sum("p").alias("p"))
-        .localCheckpoint()
-    )
-    # value iteration over (scenario, state); only CONV carries value
-    v = st.select("scenario", F.col("src").alias("state")).distinct().select(
-        "scenario", "state", F.lit(0.0).alias("v")
-    )
-    conv_v = F.when(F.col("dst") == _CONV, F.lit(1.0))
-    # NOTE (round-12, measured): checkpointing every k-th round
-    # instead of every round — the LPA discipline — was tried here and
-    # REGRESSED 4.3 s → 56.7 s at sf0.1: a lazy
-    # aggregate→join→aggregate chain over the scenario grid re-plans
-    # super-linearly under AQE, unlike LPA's single join+mode round.
-    # The per-round localCheckpoint stays.
-    for _i in range(n_rounds):
-        nxt = (
-            st.join(
-                v.select(
-                    "scenario",
-                    F.col("state").alias("dst"),
-                    F.col("v").alias("_vd"),
-                ),
-                ["scenario", "dst"],
-                "left",
+        channels = (
+            trans.select(F.col("src").alias("ch"))
+            .where(~F.col("ch").isin(_START, _CONV, _NULL))
+            .distinct()
+        )
+        scenarios = channels.select(
+            F.col("ch").alias("scenario")
+        ).unionByName(
+            channels.sparkSession.createDataFrame(
+                [("__base",)], "scenario string"
+            )
+        )
+        # scenario-adjusted transitions: drop rows FROM the removed
+        # channel; retarget rows INTO it to NULL (then re-merge p mass)
+        st = rounds.checkpoint(
+            scenarios.crossJoin(trans)
+            .where(
+                (F.col("scenario") == "__base")
+                | (F.col("src") != F.col("scenario"))
             )
             .select(
                 "scenario",
                 "src",
-                (
-                    F.col("p")
-                    * F.coalesce(conv_v, F.col("_vd"), F.lit(0.0))
-                ).alias("_t"),
-            )
-            .groupBy("scenario", F.col("src").alias("state"))
-            .agg(F.sum("_t").alias("v"))
-        )
-        v = nxt.localCheckpoint()
-    reach = v.where(F.col("state") == _START).select(
-        "scenario", F.col("v").alias("reach")
-    )
-    base = reach.where(F.col("scenario") == "__base").select(
-        F.col("reach").alias("base_reach")
-    )
-    out = (
-        reach.where(F.col("scenario") != "__base")
-        .crossJoin(F.broadcast(base))
-        .select(
-            F.col("scenario").alias("channel"),
-            F.round("reach", 6).alias("reach_without"),
-            F.round("base_reach", 6).alias("base_reach"),
-            F.when(
-                F.col("base_reach") > 0,
-                (F.col("base_reach") - F.col("reach"))
-                / F.col("base_reach"),
-            ).alias("_eff"),
-        )
-    )
-    tot = out.agg(F.sum("_eff").alias("_tot"))
-    return (
-        out.crossJoin(F.broadcast(tot))
-        .select(
-            "channel",
-            "reach_without",
-            "base_reach",
-            F.round("_eff", 6).alias("removal_effect"),
-            F.round(
                 F.when(
-                    F.col("_tot") > 0, F.col("_eff") / F.col("_tot")
-                ),
-                6,
-            ).alias("attribution"),
+                    (F.col("scenario") != "__base")
+                    & (F.col("dst") == F.col("scenario")),
+                    F.lit(_NULL),
+                )
+                .otherwise(F.col("dst"))
+                .alias("dst"),
+                "p",
+            )
+            .groupBy("scenario", "src", "dst")
+            .agg(F.sum("p").alias("p"))
         )
-        .orderBy("channel")
-    )
+        # value iteration over (scenario, state); only CONV carries value
+        v = st.select("scenario", F.col("src").alias("state")).distinct().select(
+            "scenario", "state", F.lit(0.0).alias("v")
+        )
+        conv_v = F.when(F.col("dst") == _CONV, F.lit(1.0))
+        # NOTE (round-12, measured): checkpointing every k-th round
+        # instead of every round — the LPA discipline — was tried here and
+        # REGRESSED 4.3 s → 56.7 s at sf0.1: a lazy
+        # aggregate→join→aggregate chain over the scenario grid re-plans
+        # super-linearly under AQE, unlike LPA's single join+mode round.
+        # The per-round localCheckpoint stays.
+        for _i in range(n_rounds):
+            nxt = (
+                st.join(
+                    v.select(
+                        "scenario",
+                        F.col("state").alias("dst"),
+                        F.col("v").alias("_vd"),
+                    ),
+                    ["scenario", "dst"],
+                    "left",
+                )
+                .select(
+                    "scenario",
+                    "src",
+                    (
+                        F.col("p")
+                        * F.coalesce(conv_v, F.col("_vd"), F.lit(0.0))
+                    ).alias("_t"),
+                )
+                .groupBy("scenario", F.col("src").alias("state"))
+                .agg(F.sum("_t").alias("v"))
+            )
+            v = rounds.advance(v, nxt)
+        reach = v.where(F.col("state") == _START).select(
+            "scenario", F.col("v").alias("reach")
+        )
+        base = reach.where(F.col("scenario") == "__base").select(
+            F.col("reach").alias("base_reach")
+        )
+        out = (
+            reach.where(F.col("scenario") != "__base")
+            .crossJoin(F.broadcast(base))
+            .select(
+                F.col("scenario").alias("channel"),
+                F.round("reach", 6).alias("reach_without"),
+                F.round("base_reach", 6).alias("base_reach"),
+                F.when(
+                    F.col("base_reach") > 0,
+                    (F.col("base_reach") - F.col("reach"))
+                    / F.col("base_reach"),
+                ).alias("_eff"),
+            )
+        )
+        tot = out.agg(F.sum("_eff").alias("_tot"))
+        return rounds.result(
+            out.crossJoin(F.broadcast(tot))
+            .select(
+                "channel",
+                "reach_without",
+                "base_reach",
+                F.round("_eff", 6).alias("removal_effect"),
+                F.round(
+                    F.when(
+                        F.col("_tot") > 0, F.col("_eff") / F.col("_tot")
+                    ),
+                    6,
+                ).alias("attribution"),
+            )
+            .orderBy("channel")
+        )
 
 
 def attribution_oracle_sql(

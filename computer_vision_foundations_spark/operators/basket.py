@@ -22,7 +22,6 @@ broadcast back). Items shuffle as ids; no UDF.
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -56,10 +55,10 @@ def basket_pair_rules(
     # (bk, it) feeds FIVE consumers (the basket count below, item
     # counts, both self-join sides, and the cap's anti-join probe);
     # unpersisted, each replayed the distinct over the fact table
-    # (round-12 plan audit: 46 Exchanges). Persist once — the eager
-    # n_baskets count doubles as the cache populator (the cdc/winnow
-    # discipline).
-    bi = bi.persist(StorageLevel.MEMORY_AND_DISK)
+    # (round-12 plan audit: 46 Exchanges). Materialize once with an
+    # eager localCheckpoint; the ContextCleaner frees its blocks once
+    # the result is unreachable.
+    bi = bi.localCheckpoint()
     n_baskets = bi.select("bk").distinct().count()
     item_counts = bi.groupBy(F.col("it")).agg(
         F.count(F.lit(1)).alias("n_item")

@@ -33,10 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from computer_vision_foundations_spark.operators.components import (
-    _ckpt_rdd,
-    _release,
-)
+from computer_vision_foundations_spark.operators._iterative import Rounds
 
 __all__ = ["bfs_distances", "bfs_oracle_sql"]
 
@@ -55,46 +52,34 @@ def bfs_distances(
     l0 CTE). Nodes not reached within ``n_hops`` are absent.
     """
     spark = edges.sparkSession
-    e = (
-        edges.select(
-            F.col(src).cast("bigint").alias("src"),
-            F.col(dst).cast("bigint").alias("dst"),
+    with Rounds() as rounds:
+        e = rounds.checkpoint(
+            edges.select(
+                F.col(src).cast("bigint").alias("src"),
+                F.col(dst).cast("bigint").alias("dst"),
+            ).distinct()
         )
-        .distinct()
-        .localCheckpoint()
-    )
-    e_rdd = _ckpt_rdd(e)
-
-    frontier = (
-        spark.createDataFrame([(int(s),) for s in seeds], "node bigint")
-        .distinct()
-        .localCheckpoint()
-    )
-    frontier_rdd = _ckpt_rdd(frontier)
-    visited = frontier.withColumn("dist", F.lit(0)).localCheckpoint()
-    visited_rdd = _ckpt_rdd(visited)
-
-    for level in range(1, n_hops + 1):
-        nxt = (
-            frontier.join(e, frontier["node"] == e["src"])
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .localCheckpoint()  # materializes; prev frontier now dead
+        frontier = rounds.checkpoint(
+            spark.createDataFrame(
+                [(int(s),) for s in seeds], "node bigint"
+            ).distinct()
         )
-        nxt_rdd = _ckpt_rdd(nxt)
-        _release(frontier_rdd)
-        frontier, frontier_rdd = nxt, nxt_rdd
-        if not nxt.take(1):  # frontier exhausted — diameter reached
-            break
-        new_visited = visited.unionByName(
-            nxt.withColumn("dist", F.lit(level))
-        ).localCheckpoint()
-        _release(visited_rdd)
-        visited, visited_rdd = new_visited, _ckpt_rdd(new_visited)
-    _release(e_rdd)
-    _release(frontier_rdd)
-    return visited
+        visited = rounds.checkpoint(frontier.withColumn("dist", F.lit(0)))
+        for level in range(1, n_hops + 1):
+            frontier = rounds.advance(
+                frontier,
+                frontier.join(e, frontier["node"] == e["src"])
+                .select(F.col("dst").alias("node"))
+                .distinct()
+                .join(visited.select("node"), "node", "left_anti"),
+            )
+            if not frontier.take(1):  # frontier exhausted — diameter reached
+                break
+            visited = rounds.advance(
+                visited,
+                visited.unionByName(frontier.withColumn("dist", F.lit(level))),
+            )
+        return rounds.result(visited)
 
 
 def bfs_oracle_sql(

@@ -36,10 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.functions import pandas_udf
 
-from computer_vision_foundations_spark.operators.components import (
-    _ckpt_rdd,
-    _release,
-)
+from computer_vision_foundations_spark.operators._iterative import Rounds
 
 __all__ = ["bpe_word_counts", "bpe_train", "bpe_encode"]
 
@@ -90,52 +87,48 @@ def bpe_train(
     words = bpe_word_counts(df, text_col).select(
         F.split(F.col("word"), "").alias("syms"), "cnt"
     )
-    words = words.localCheckpoint()
-    words_rdd = _ckpt_rdd(words)
     merges: list[tuple[str, str]] = []
-    # Checkpoint every CKPT_EVERY rounds, not every round (the LPA
-    # every-other-round discipline, round-12): the word table is
-    # vocab-sized, so re-evaluating ≤ CKPT_EVERY−1 pending rewrite
-    # folds inside the next argmax job is far cheaper than the
-    # per-round materialization job it replaces — the merge loop's
-    # cost at gate SF was the 2·n_merges sequential jobs, not the
-    # folds. The argmax collect reads through the pending lazy
-    # rewrites, so the merge SEQUENCE is unchanged.
-    ckpt_every = 4
-    pending = 0
-    for _ in range(n_merges):
-        pairs = (
-            words.select(
-                "cnt",
-                F.explode(
-                    F.zip_with(
-                        F.slice(F.col("syms"), 1, F.size("syms") - 1),
-                        F.slice(F.col("syms"), 2, F.size("syms") - 1),
-                        lambda l, r: F.struct(l.alias("a"), r.alias("b")),
-                    )
-                ).alias("p"),
+    with Rounds() as rounds:
+        words = ckpt = rounds.checkpoint(words)
+        # Checkpoint every CKPT_EVERY rounds, not every round (the LPA
+        # every-other-round discipline, round-12): the word table is
+        # vocab-sized, so re-evaluating ≤ CKPT_EVERY−1 pending rewrite
+        # folds inside the next argmax job is far cheaper than the
+        # per-round materialization job it replaces — the merge loop's
+        # cost at gate SF was the 2·n_merges sequential jobs, not the
+        # folds. The argmax collect reads through the pending lazy
+        # rewrites, so the merge SEQUENCE is unchanged.
+        ckpt_every = 4
+        pending = 0
+        for _ in range(n_merges):
+            pairs = (
+                words.select(
+                    "cnt",
+                    F.explode(
+                        F.zip_with(
+                            F.slice(F.col("syms"), 1, F.size("syms") - 1),
+                            F.slice(F.col("syms"), 2, F.size("syms") - 1),
+                            lambda l, r: F.struct(l.alias("a"), r.alias("b")),
+                        )
+                    ).alias("p"),
+                )
+                .groupBy("p")
+                .agg(F.sum("cnt").alias("n"))
+                .orderBy(F.col("n").desc(), F.col("p.a").asc(), F.col("p.b").asc())
+                .limit(1)
+                .collect()
             )
-            .groupBy("p")
-            .agg(F.sum("cnt").alias("n"))
-            .orderBy(F.col("n").desc(), F.col("p.a").asc(), F.col("p.b").asc())
-            .limit(1)
-            .collect()
-        )
-        if not pairs or pairs[0]["n"] < min_pair_count:
-            break
-        a, b = pairs[0]["p"]["a"], pairs[0]["p"]["b"]
-        merges.append((a, b))
-        words = words.select(
-            _apply_merge(F.col("syms"), a, b).alias("syms"), "cnt"
-        )
-        pending += 1
-        if pending >= ckpt_every:
-            new = words.localCheckpoint()
-            _release(words_rdd)
-            words_rdd = _ckpt_rdd(new)
-            words = new
-            pending = 0
-    _release(words_rdd)
+            if not pairs or pairs[0]["n"] < min_pair_count:
+                break
+            a, b = pairs[0]["p"]["a"], pairs[0]["p"]["b"]
+            merges.append((a, b))
+            words = words.select(
+                _apply_merge(F.col("syms"), a, b).alias("syms"), "cnt"
+            )
+            pending += 1
+            if pending >= ckpt_every:
+                words = ckpt = rounds.advance(ckpt, words)
+                pending = 0
     return merges
 
 

@@ -36,67 +36,12 @@ ids, so each component's id IS its canonical (smallest) member.
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from computer_vision_foundations_spark.operators._iterative import Rounds, mirror
+
 __all__ = ["connected_components", "dedup_clusters"]
-
-# Serializes the AQE read-set-restore in `_ckpt_partitioned`: two
-# threads interleaving it would each restore what the other set, and
-# leave AQE off for the whole session.
-_AQE_TOGGLE_LOCK = threading.Lock()
-
-
-def _ckpt_partitioned(df: DataFrame, *keys: str) -> DataFrame:
-    """``repartition(keys) + localCheckpoint`` that PRESERVES the hash
-    partitioning on the checkpointed LogicalRDD.
-
-    The broadcast-off round shape of every iterative graph operator
-    wants the edge list laid out by its per-round join key ONCE so no
-    round re-shuffles it (r12 verdict: beyond the ~1e8-node broadcast
-    contract the old fallback re-shuffled the corpus-sized edge list
-    every round). ``Dataset.checkpoint`` captures
-    ``physicalPlan.outputPartitioning`` — but under AQE the physical
-    plan is an un-executed ``AdaptiveSparkPlanExec`` whose partitioning
-    is still ``UnknownPartitioning`` (measured: the checkpointed scan
-    reports UnknownPartitioning(0) with AQE on, hashpartitioning(key)
-    with it off). AQE is disabled ONLY while this checkpoint plan is
-    constructed+run, under ``_AQE_TOGGLE_LOCK`` so concurrent callers
-    restore the value read before any of them toggled it. It is a
-    perf-only toggle, so an unrelated job planned in the window at most
-    loses adaptive coalescing for that one plan."""
-    spark = df.sparkSession
-    key = "spark.sql.adaptive.enabled"
-    with _AQE_TOGGLE_LOCK:
-        old = spark.conf.get(key)
-        spark.conf.set(key, "false")
-        try:
-            return df.repartition(*[F.col(k) for k in keys]).localCheckpoint()
-        finally:
-            spark.conf.set(key, old)
-
-
-def _ckpt_rdd(df: DataFrame):
-    """JVM RDD backing a ``localCheckpoint``'d DataFrame (its analyzed
-    plan is a ``LogicalRDD``), so the storage blocks can be released
-    the moment the round's table is provably dead. A local checkpoint
-    truncates lineage, so its blocks are the ONLY copy — release
-    strictly after the last consumer materialized. Returns ``None``
-    (leak-don't-crash) if the plan shape ever changes."""
-    try:
-        return df._jdf.queryExecution().analyzed().rdd()
-    except Exception:
-        return None
-
-
-def _release(jrdd) -> None:
-    if jrdd is not None:
-        try:
-            jrdd.unpersist(False)
-        except Exception:
-            pass
 
 
 def connected_components(
@@ -104,89 +49,41 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 25,
-    broadcast_labels: bool = True,
 ) -> DataFrame:
     """``(node, component)`` for every node appearing in ``edges``;
     component = smallest node id reachable. Raises if not converged
     within ``max_iter`` rounds (pathological diameter — pre-split the
     graph or raise the cap).
 
-    ``broadcast_labels`` broadcasts the per-round (node, long) label
-    table into the edge join and the node-sized min/jump tables into
-    the label left-joins — the pagerank ``broadcast_degrees`` 16-byte
-    row size contract (flip off beyond ~10^8 nodes). With it on, the
-    checkpointed edge list is scanned, never re-shuffled, each round
-    (round-12, guide §3.1/§2.4 — a ``localCheckpoint``'d frame is a
-    stats-less LogicalRDD, so the planner can never discover the
-    broadcast itself). Every aggregate here is ``min`` over longs:
-    join-strategy independent.
-
-    With it OFF (the >1e8-node regime), the edge list is checkpointed
-    HASH-PARTITIONED on the round join key ``u`` (r13, guide
-    §2.4/§3.3): each round's edge⋈labels join then shuffles only the
-    node-sized label table into the edge layout, and the node-sized
-    sides carry a ``shuffle_hash`` hint so the edge stream is hashed
-    against a per-partition label build instead of being re-SORTED
-    every round. Per-round edge-list exchanges: 1 → 0; the only
-    remaining wide per-round exchange is the partial-aggregated
-    neighbor-min stream (bounded by |V| per map partition)."""
-    _b = (
-        F.broadcast
-        if broadcast_labels
-        else (lambda d: d.hint("shuffle_hash"))
-    )
-    # explode-mirror (round 8): one reference to the upstream pipeline
-    # instead of two (see lpa.py — the union-of-two-selects form
-    # computed the pair generator twice before the checkpoint)
-    sym = edges.select(
-        F.explode(
-            F.array(
-                F.struct(F.col(src).alias("u"), F.col(dst).alias("v")),
-                F.struct(F.col(dst).alias("u"), F.col(src).alias("v")),
+    The per-round label table joins the edge list on ``u``, and the
+    node-sized min/jump tables join the labels, in the layout
+    ``operators/_iterative`` works out from the edge count. Every
+    aggregate here is ``min`` over longs: join-strategy independent."""
+    with Rounds() as rounds:
+        # materialize ONCE with a flat plan (see module docstring:
+        # persist alone leaves the upstream logical plan to be
+        # re-analyzed every round)
+        sym = rounds.edges(mirror(edges, src, dst).distinct(), "u")
+        # round 0 fused into initialization: comp = min(node, neighbors)
+        # directly from the edge list — saves one full loop iteration
+        labels = rounds.checkpoint(
+            sym.groupBy(F.col("v").alias("node"))
+            .agg(F.min("u").alias("_mn"))
+            .select(
+                "node", F.least(F.col("node"), F.col("_mn")).alias("comp")
             )
-        ).alias("_e")
-    ).select("_e.u", "_e.v")
-    # materialize ONCE with a flat plan (see module docstring: persist
-    # alone leaves the upstream logical plan to be re-analyzed every
-    # round); broadcast-off additionally lays the blocks out by the
-    # round join key so no round re-shuffles them
-    sym = sym.distinct()
-    sym = (
-        sym.localCheckpoint()
-        if broadcast_labels
-        else _ckpt_partitioned(sym, "u")
-    )
-    sym_rdd = _ckpt_rdd(sym)
-    # round 0 fused into initialization: comp = min(node, neighbors)
-    # directly from the edge list — saves one full loop iteration
-    labels = (
-        sym.groupBy(F.col("v").alias("node"))
-        .agg(F.min("u").alias("_mn"))
-        .select(
-            "node", F.least(F.col("node"), F.col("_mn")).alias("comp")
         )
-        .localCheckpoint()
-    )
-    labels_rdd = _ckpt_rdd(labels)
-    prev_sum = labels.agg(F.sum("comp")).collect()[0][0]
-    # ALL exit paths — convergence, iteration-cap RuntimeError, and any
-    # exception thrown mid-round (ADVICE r3: a failed round used to
-    # leak the edge-list + label checkpoint blocks in a long-lived
-    # session) — release the edge list; the label blocks are released
-    # on every path EXCEPT convergence, where the final label table
-    # stays persisted because it backs the returned DataFrame (callers
-    # get a flat ExistingRDD plan; Spark's ContextCleaner frees it when
-    # the result goes out of scope).
-    converged = False
-    try:
+        prev_sum = labels.agg(F.sum("comp")).collect()[0][0]
         for i in range(max_iter):
             nbr_min = (
-                sym.join(_b(labels), sym["u"] == labels["node"])
+                sym.join(rounds.side(labels), sym["u"] == labels["node"])
                 .groupBy("v")
                 .agg(F.min("comp").alias("nbr_comp"))
             )
             new = (
-                labels.join(_b(nbr_min), labels["node"] == nbr_min["v"], "left")
+                labels.join(
+                    rounds.side(nbr_min), labels["node"] == nbr_min["v"], "left"
+                )
                 .select(
                     "node",
                     F.least(
@@ -201,33 +98,22 @@ def connected_components(
                 F.col("node").alias("comp"), F.col("comp").alias("comp2")
             )
             obs = Observation(f"cc_round_{i}")
-            new = (
-                new.join(_b(jump), "comp", "left")
+            labels = rounds.advance(
+                labels,
+                new.join(rounds.side(jump), "comp", "left")
                 .select("node", F.coalesce("comp2", "comp").alias("comp"))
-                .observe(obs, F.sum("comp").alias("s"))
-                .localCheckpoint()
+                .observe(obs, F.sum("comp").alias("s")),
             )
             # the eager checkpoint IS the action; observe rode along
             cur_sum = obs.get["s"]
-            # `new` is fully materialized, so the previous round's label
-            # blocks have no remaining consumer — release them now
-            # instead of waiting for ContextCleaner GC (ADVICE r2:
-            # checkpoint blocks otherwise accumulate across many dedup
-            # graphs in a long-lived session; clearCache() does not
-            # drop RDD blocks).
-            _release(labels_rdd)
-            labels, labels_rdd = new, _ckpt_rdd(new)
             if cur_sum == prev_sum:
-                converged = True
-                return labels.select("node", F.col("comp").alias("component"))
+                return rounds.result(
+                    labels.select("node", F.col("comp").alias("component"))
+                )
             prev_sum = cur_sum
         raise RuntimeError(
             f"connected_components: no fixpoint in {max_iter} rounds"
         )
-    finally:
-        _release(sym_rdd)
-        if not converged:
-            _release(labels_rdd)
 
 
 def dedup_clusters(

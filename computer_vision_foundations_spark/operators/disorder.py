@@ -39,7 +39,6 @@ direct global-rank form, which is exactly equivalent).
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -64,7 +63,7 @@ def event_disorder_stats(
     (pass the unique ingest id); the quantile VALUE is tie-stable
     regardless (equal lateness values are adjacent in rank order).
 
-    The lateness projection is persisted internally (MEMORY_AND_DISK)
+    The lateness projection is checkpointed internally (MEMORY_AND_DISK)
     — the audit's phases re-scan it, never the source."""
     order = [F.col(arrival_col)] + (
         [F.col(tiebreak_col)] if tiebreak_col else []
@@ -80,14 +79,13 @@ def event_disorder_stats(
     # consumers (total, extremes, the histogram, the within-bin scan)
     # plus every broadcast branch re-using the extremes; unpersisted,
     # each consumer replayed the full window (round-12 plan audit: 176
-    # Exchanges, ~5 window passes). Persist it once with an eager count
-    # (the cdc/winnow discipline — consumers inside one job race cache
-    # population), and checkpoint the 1-row extremes so its many
-    # broadcast branches are free.
+    # Exchanges, ~5 window passes). Materialize it once with one eager
+    # localCheckpoint job (its blocks are freed with the result), and
+    # checkpoint the 1-row extremes so its many broadcast branches are
+    # free.
     late = df.select(
         (F.max(us).over(w) - us).alias("late_us")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    late.count()
+    ).localCheckpoint()
     lates = late.where(F.col("late_us") > 0)
     total = late.agg(F.count(F.lit(1)).alias("n_events"))
     ext = lates.agg(

@@ -31,11 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from computer_vision_foundations_spark.operators.components import (
-    _ckpt_partitioned,
-    _ckpt_rdd,
-    _release,
-)
+from computer_vision_foundations_spark.operators._iterative import Rounds
 
 __all__ = ["hits", "hits_oracle_sql"]
 
@@ -55,7 +51,6 @@ def hits(
     src: str = "src",
     dst: str = "dst",
     n_iter: int = 5,
-    broadcast_scores: bool = True,
 ) -> DataFrame:
     """``(node, hub, authority)`` after ``n_iter`` HITS iterations.
 
@@ -63,109 +58,86 @@ def hits(
     half-step; nodes missing from a side (no in- or out-edges) carry 0
     for that score, matching the unrolled-SQL oracle.
 
-    ``broadcast_scores`` broadcasts the per-half-step (node, double)
-    score table into the edge join and the aggregated sums into the
-    node left-join — the pagerank ``broadcast_degrees`` size contract
-    (16-byte rows; flip off beyond ~10^8 nodes). With it on, the
-    checkpointed edge list is scanned, never re-shuffled, each
-    half-step (round-12, guide §3.1/§2.4).
-
-    With it OFF (the >1e8-node regime), the edge list is checkpointed
-    TWICE, hash-partitioned on ``src`` and on ``dst`` (r13, guide
-    §2.4/§3.3) — HITS alternates join keys between half-steps, so one
-    layout cannot serve both. Each half-step then shuffles only the
-    node-sized score table into the matching edge layout, with a
-    ``shuffle_hash`` hint so the edge stream is never re-sorted.
-    Per-half-step edge-list exchanges: 1 → 0, for a one-time 2× edge
-    storage cost (16-byte rows).
+    The per-half-step (node, double) score table joins the edge list,
+    and the aggregated sums join the node table, in the layout
+    ``operators/_iterative`` works out from the edge count. HITS
+    alternates join keys between half-steps, so one co-partitioned
+    layout cannot serve both: co-partitioned, the edge list is laid
+    out TWICE, hash-partitioned on ``src`` and on ``dst`` (r13), for a
+    one-time 2× edge storage cost (16-byte rows).
     """
-    _b = (
-        F.broadcast if broadcast_scores else (lambda d: d.hint("shuffle_hash"))
-    )
-    e0 = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")
-    ).distinct()
-    if broadcast_scores:
-        e_src = e_dst = e0.localCheckpoint()
-        e_rdd, e_dst_rdd = _ckpt_rdd(e_src), None
-    else:
-        e_src = _ckpt_partitioned(e0, "src")
-        e_rdd = _ckpt_rdd(e_src)
-        # second layout derives from the first checkpoint's blocks —
-        # the upstream edge pipeline is not replayed
-        e_dst = _ckpt_partitioned(e_src, "dst")
-        e_dst_rdd = _ckpt_rdd(e_dst)
-    nodes = (
-        e_src.select(F.col("src").alias("node"))
-        .unionByName(e_src.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    nodes_rdd = _ckpt_rdd(nodes)
+    with Rounds() as rounds:
+        e_src = rounds.edges(
+            edges.select(
+                F.col(src).alias("src"), F.col(dst).alias("dst")
+            ).distinct(),
+            "src",
+            nodes_per_row=2,
+        )
+        # the second layout derives from the first one's blocks — the
+        # upstream edge pipeline is not replayed
+        e_dst = e_src if rounds.broadcast else rounds.checkpoint(e_src, "dst")
+        nodes = rounds.checkpoint(
+            e_src.select(F.col("src").alias("node"))
+            .unionByName(e_src.select(F.col("dst").alias("node")))
+            .distinct()
+        )
 
-    hubs = nodes.select("node", F.lit(1.0).alias("h"))
-    hubs_rdd = None
-    auths = None
-    auths_rdd = None
-    # Checkpoint the RAW half-step sums and leave normalization lazy:
-    # `_l2_normalize` reads its input twice (norm agg + value side), so
-    # checkpointing AFTER it evaluated each edge join twice per
-    # materialization. With the checkpoint on the raw sums, every edge
-    # join runs exactly once per half-step and the norm is a cheap
-    # node-sized agg over the checkpoint (measured on za51: 16.8 s → see
-    # SCALE.md — the edge join dominated, the norm agg is noise).
-    for _ in range(n_iter):
-        a_raw = (
-            nodes.join(
-                _b(
-                    e_src.join(
-                        _b(hubs.withColumnRenamed("node", "src")), "src"
-                    )
-                    .groupBy(F.col("dst").alias("node"))
-                    .agg(F.sum("h").alias("a"))
-                ),
-                "node",
-                "left",
+        hubs = nodes.select("node", F.lit(1.0).alias("h"))
+        a_raw = h_raw = auths = None
+        # Checkpoint the RAW half-step sums and leave normalization
+        # lazy: `_l2_normalize` reads its input twice (norm agg + value
+        # side), so checkpointing AFTER it evaluated each edge join
+        # twice per materialization. With the checkpoint on the raw
+        # sums, every edge join runs exactly once per half-step and the
+        # norm is a cheap node-sized agg over the checkpoint (measured
+        # on za51: 16.8 s → see SCALE.md — the edge join dominated, the
+        # norm agg is noise).
+        for _ in range(n_iter):
+            a_raw = rounds.advance(
+                a_raw,
+                nodes.join(
+                    rounds.side(
+                        e_src.join(
+                            rounds.side(hubs.withColumnRenamed("node", "src")),
+                            "src",
+                        )
+                        .groupBy(F.col("dst").alias("node"))
+                        .agg(F.sum("h").alias("a"))
+                    ),
+                    "node",
+                    "left",
+                ).select("node", F.coalesce("a", F.lit(0.0)).alias("a")),
             )
-            .select("node", F.coalesce("a", F.lit(0.0)).alias("a"))
-            .localCheckpoint()
-        )
-        _release(auths_rdd)
-        auths_rdd = _ckpt_rdd(a_raw)
-        auths = _l2_normalize(a_raw, "a")
-
-        h_raw = (
-            nodes.join(
-                _b(
-                    e_dst.join(
-                        _b(auths.withColumnRenamed("node", "dst")), "dst"
-                    )
-                    .groupBy(F.col("src").alias("node"))
-                    .agg(F.sum("a").alias("h"))
-                ),
-                "node",
-                "left",
+            auths = _l2_normalize(a_raw, "a")
+            h_raw = rounds.advance(
+                h_raw,
+                nodes.join(
+                    rounds.side(
+                        e_dst.join(
+                            rounds.side(auths.withColumnRenamed("node", "dst")),
+                            "dst",
+                        )
+                        .groupBy(F.col("src").alias("node"))
+                        .agg(F.sum("a").alias("h"))
+                    ),
+                    "node",
+                    "left",
+                ).select("node", F.coalesce("h", F.lit(0.0)).alias("h")),
             )
-            .select("node", F.coalesce("h", F.lit(0.0)).alias("h"))
-            .localCheckpoint()
-        )
-        _release(hubs_rdd)
-        hubs_rdd = _ckpt_rdd(h_raw)
-        hubs = _l2_normalize(h_raw, "h")
+            hubs = _l2_normalize(h_raw, "h")
 
-    out = (
-        nodes.join(_b(hubs), "node", "left")
-        .join(_b(auths), "node", "left")
-        .select(
-            "node",
-            F.coalesce("h", F.lit(0.0)).alias("hub"),
-            F.coalesce("a", F.lit(0.0)).alias("authority"),
+        return rounds.result(
+            rounds.checkpoint(
+                nodes.join(rounds.side(hubs), "node", "left")
+                .join(rounds.side(auths), "node", "left")
+                .select(
+                    "node",
+                    F.coalesce("h", F.lit(0.0)).alias("hub"),
+                    F.coalesce("a", F.lit(0.0)).alias("authority"),
+                )
+            )
         )
-        .localCheckpoint()  # materialize BEFORE releasing inputs
-    )
-    for handle in (e_rdd, e_dst_rdd, nodes_rdd, hubs_rdd, auths_rdd):
-        _release(handle)
-    return out
 
 
 def hits_oracle_sql(edges_sql: str, n_iter: int = 5, round_digits: int | None = None) -> str:

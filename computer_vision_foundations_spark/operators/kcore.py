@@ -32,11 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from computer_vision_foundations_spark.operators.components import (
-    _ckpt_partitioned,
-    _ckpt_rdd,
-    _release,
-)
+from computer_vision_foundations_spark.operators._iterative import Rounds, mirror
 
 __all__ = ["k_core", "k_core_collapsed", "kcore_oracle_sql"]
 
@@ -45,22 +41,7 @@ def _sym(edges: DataFrame, src: str, dst: str) -> DataFrame:
     # filter self-loops BEFORE mirroring: the reversed half must not
     # reintroduce them (quotient edge lists genuinely contain
     # same-class rows)
-    # explode-mirror (round 8): unionByName(base, base.select) embeds
-    # the upstream pipeline twice in the plan — it ran twice wherever
-    # the caller had not checkpointed it first
-    return (
-        edges.where(F.col(src) != F.col(dst))
-        .select(
-            F.explode(
-                F.array(
-                    F.struct(F.col(src).alias("u"), F.col(dst).alias("v")),
-                    F.struct(F.col(dst).alias("u"), F.col(src).alias("v")),
-                )
-            ).alias("_e")
-        )
-        .select("_e.u", "_e.v")
-        .distinct()
-    )
+    return mirror(edges.where(F.col(src) != F.col(dst)), src, dst).distinct()
 
 
 def k_core(
@@ -69,49 +50,27 @@ def k_core(
     dst: str = "id_b",
     k: int = 3,
     n_rounds: int = 8,
-    broadcast_survivors: bool = True,
 ) -> DataFrame:
     """``(node, degree)`` of the subgraph left after ``n_rounds`` of
     degree-< k peeling — the k-core once the peel has converged
     (monotone, so extra rounds are no-ops).
 
-    ``broadcast_survivors`` broadcasts the per-round survivor node
-    table into the two induction semi-joins — the pagerank
-    ``broadcast_degrees`` size contract (8-byte rows; flip off beyond
-    ~10^8 nodes). With it on, the checkpointed edge list is scanned,
-    never re-shuffled, each round (round-12, guide §3.1/§2.4 — a
-    ``localCheckpoint``'d frame is a stats-less LogicalRDD, so the
-    planner can never pick the broadcast on its own). Semi-join
-    output is pure set membership: join-strategy independent.
-
-    With it OFF (the >1e8-node regime), each round's edge table is
-    checkpointed HASH-PARTITIONED on ``u`` (r13, guide §2.4/§3.3):
-    the degree aggregate and the u-side induction semi-join consume
-    the layout exchange-free (the survivor table derives from the
-    same layout), and the node-sized survivor sides carry a
-    ``shuffle_hash`` hint so the edge stream is hash-probed, never
-    re-sorted. Per-round edge-sized exchanges: 2-over-the-full-list →
-    2-over-the-peeled-stream (the v-side induction, plus the layout
-    restore that replaces the next round's exchange)."""
-    _b = (
-        F.broadcast
-        if broadcast_survivors
-        else (lambda d: d.hint("shuffle_hash"))
-    )
-    sym = _sym(edges, src, dst)
-    sym = (
-        sym.localCheckpoint()
-        if broadcast_survivors
-        else _ckpt_partitioned(sym, "u")
-    )
-    sym_rdd = _ckpt_rdd(sym)
-    # the checkpoint is eager, so counting the checkpointed block is
-    # free — and the peel is MONOTONE (edges only leave), so an
-    # unchanged edge count IS the fixpoint: stop early with an output
-    # identical to the fixed-round unroll (the oracle's 8 rounds are
-    # no-ops past convergence). Same discipline as k_core_collapsed.
-    prev_cnt = sym.count()
-    try:
+    The per-round survivor node table joins the two induction
+    semi-joins in the layout ``operators/_iterative`` works out from
+    the edge count. Co-partitioned, each round's edge table is
+    checkpointed hash-partitioned on ``u``: the degree aggregate and
+    the u-side induction semi-join consume the layout exchange-free,
+    leaving the v-side induction and the layout restore as the
+    per-round edge-sized exchanges, both over the peeled stream.
+    Semi-join output is pure set membership: join-strategy
+    independent."""
+    with Rounds() as rounds:
+        sym = rounds.edges(_sym(edges, src, dst), "u")
+        # the peel is MONOTONE (edges only leave), so an unchanged edge
+        # count IS the fixpoint: stop early with an output identical to
+        # the fixed-round unroll (the oracle's 8 rounds are no-ops past
+        # convergence). The first count rode the edge checkpoint.
+        prev_cnt = rounds.edge_rows
         for _ in range(n_rounds):
             keep = (
                 sym.groupBy("u")
@@ -119,28 +78,21 @@ def k_core(
                 .where(F.col("_d") >= k)
                 .select("u")
             )
-            nxt = sym.join(_b(keep), "u", "left_semi").join(
-                _b(keep.select(F.col("u").alias("v"))), "v", "left_semi"
+            nxt = sym.join(rounds.side(keep), "u", "left_semi").join(
+                rounds.side(keep.select(F.col("u").alias("v"))),
+                "v",
+                "left_semi",
             )
-            nxt = (
-                nxt.localCheckpoint()
-                if broadcast_survivors
-                else _ckpt_partitioned(nxt, "u")
-            )
-            _release(sym_rdd)
-            sym, sym_rdd = nxt, _ckpt_rdd(nxt)
+            sym = rounds.advance(sym, nxt, "u")
             cnt = sym.count()
             if cnt == prev_cnt:
                 break
             prev_cnt = cnt
-    except Exception:
-        _release(sym_rdd)
-        raise
-    return (
-        sym.groupBy(F.col("u").alias("node"))
-        .agg(F.count(F.lit(1)).alias("degree"))
-        .orderBy("node")
-    )
+        return rounds.result(
+            sym.groupBy(F.col("u").alias("node"))
+            .agg(F.count(F.lit(1)).alias("degree"))
+            .orderBy("node")
+        )
 
 
 def k_core_collapsed(
@@ -152,17 +104,16 @@ def k_core_collapsed(
     dst: str = "id_b",
     k: int = 3,
     n_rounds: int = 8,
-    broadcast_survivors: bool = True,
 ) -> DataFrame:
     """``k_core`` for graphs whose adjacency is a pure function of a
-    class key — same output, quotient-sized rounds.
-    ``broadcast_survivors``: the ``k_core`` contract, applied to the
-    per-round alive-class/weight tables (quotient-sized, strictly
-    smaller than the node table). With it off, the static quotient
-    edge table is checkpointed hash-partitioned on ``u`` (r13): the
-    u-side alive semi-join and the final degree aggregates consume
-    the layout exchange-free, leaving the v-side weight join as the
-    one quotient-edge-sized exchange per round.
+    class key — same output, quotient-sized rounds. The per-round
+    alive-class/weight tables (quotient-sized, strictly smaller than
+    the node table) take the ``k_core`` layout, decided from the class
+    map's row count, which bounds the class count. Co-partitioned, the
+    static quotient edge table is checkpointed hash-partitioned on
+    ``u`` (r13): the u-side alive semi-join and the final degree
+    aggregates consume the layout exchange-free, leaving the v-side
+    weight join as the one quotient-edge-sized exchange per round.
 
     Same structural-equivalence contract as
     ``triangles.triangle_stats_collapsed`` (identical neighborhoods;
@@ -175,101 +126,65 @@ def k_core_collapsed(
     quotient-sized tables only — on dedup graphs that's the distinct-
     fingerprint count, not the clique-expanded edge count.
     """
-    _b = (
-        F.broadcast
-        if broadcast_survivors
-        else (lambda d: d.hint("shuffle_hash"))
-    )
-    cmap = classes.select(
-        F.col(node_col).alias("node"), F.col(cls_col).alias("cls")
-    ).localCheckpoint()
-    w = cmap.groupBy("cls").agg(F.count(F.lit(1)).alias("w"))
-    ca = cmap.select(F.col("node").alias(src), F.col("cls").alias("_ca"))
-    cb = cmap.select(F.col("node").alias(dst), F.col("cls").alias("_cb"))
-    qsym = _sym(pairs.join(ca, src).join(cb, dst), "_ca", "_cb")
-    qsym = (
-        qsym.localCheckpoint()
-        if broadcast_survivors
-        else _ckpt_partitioned(qsym, "u")
-    )
-    # alive classes: participate in the graph at all
-    in_graph = qsym.select(F.col("u").alias("cls")).distinct()
-    alive = (
-        w.join(in_graph, "cls", "left_semi")
-        .unionByName(w.where(F.col("w") >= 2))
-        .distinct()
-        .localCheckpoint()
-    )
-    alive_rdd = _ckpt_rdd(alive)
-    n_alive = alive.count()
-    try:
-        for _ in range(n_rounds):
-            wj = alive.select(
-                F.col("cls").alias("v"), F.col("w").alias("wj")
+    with Rounds() as rounds:
+        cmap = rounds.edges(
+            classes.select(
+                F.col(node_col).alias("node"), F.col(cls_col).alias("cls")
             )
+        )
+        w = cmap.groupBy("cls").agg(F.count(F.lit(1)).alias("w"))
+        ca = cmap.select(F.col("node").alias(src), F.col("cls").alias("_ca"))
+        cb = cmap.select(F.col("node").alias(dst), F.col("cls").alias("_cb"))
+        qsym = rounds.checkpoint(
+            _sym(pairs.join(ca, src).join(cb, dst), "_ca", "_cb"), "u"
+        )
+
+        def degrees(alive: DataFrame) -> DataFrame:
+            wj = alive.select(F.col("cls").alias("v"), F.col("w").alias("wj"))
             nbr_sum = (
                 qsym.join(
-                    _b(alive.select(F.col("cls").alias("u"))),
+                    rounds.side(alive.select(F.col("cls").alias("u"))),
                     "u",
                     "left_semi",
                 )
-                .join(_b(wj), "v")
+                .join(rounds.side(wj), "v")
                 .groupBy("u")
                 .agg(F.sum("wj").alias("s"))
             )
-            deg = (
-                alive.join(
-                    _b(nbr_sum.select(F.col("u").alias("cls"), "s")),
-                    "cls",
-                    "left",
-                )
-                .select(
-                    "cls",
-                    "w",
-                    (
-                        F.col("w")
-                        - 1
-                        + F.coalesce(F.col("s"), F.lit(0))
-                    ).alias("deg"),
-                )
+            return alive.join(
+                rounds.side(nbr_sum.select(F.col("u").alias("cls"), "s")),
+                "cls",
+                "left",
+            ).select(
+                "cls",
+                "w",
+                (F.col("w") - 1 + F.coalesce(F.col("s"), F.lit(0))).alias("deg"),
             )
-            nxt = deg.where(F.col("deg") >= k).select("cls", "w")
-            nxt = nxt.localCheckpoint()
-            n_next = nxt.count()
-            _release(alive_rdd)
-            alive, alive_rdd = nxt, _ckpt_rdd(nxt)
+
+        # alive classes: participate in the graph at all
+        in_graph = qsym.select(F.col("u").alias("cls")).distinct()
+        alive = rounds.checkpoint(
+            w.join(in_graph, "cls", "left_semi")
+            .unionByName(w.where(F.col("w") >= 2))
+            .distinct()
+        )
+        n_alive = alive.count()
+        for _ in range(n_rounds):
+            alive = rounds.advance(
+                alive, degrees(alive).where(F.col("deg") >= k).select("cls", "w")
+            )
+            n_next = alive.count()
             if n_next == n_alive:
                 break  # fixpoint: further rounds are no-ops
             n_alive = n_next
-        # final degrees over the surviving quotient
-        wj = alive.select(F.col("cls").alias("v"), F.col("w").alias("wj"))
-        nbr_sum = (
-            qsym.join(
-                _b(alive.select(F.col("cls").alias("u"))), "u", "left_semi"
-            )
-            .join(_b(wj), "v")
-            .groupBy("u")
-            .agg(F.sum("wj").alias("s"))
-        )
-        final = alive.join(
-            _b(nbr_sum.select(F.col("u").alias("cls"), "s")), "cls", "left"
-        ).select(
-            "cls",
-            (
-                F.col("w") - 1 + F.coalesce(F.col("s"), F.lit(0))
-            ).alias("degree"),
-        )
-        # the last alive/cmap blocks stay checkpointed: the returned
-        # lazy frame still reads them (k_core's convention — priors
-        # are released each round, the final table is not)
-        return (
-            cmap.join(_b(final), "cls")
+        # final degrees over the surviving quotient; the returned lazy
+        # frame reads the cmap, qsym and last alive checkpoints
+        final = degrees(alive).select("cls", F.col("deg").alias("degree"))
+        return rounds.result(
+            cmap.join(rounds.side(final), "cls")
             .select("node", "degree")
             .orderBy("node")
         )
-    except Exception:
-        _release(alive_rdd)
-        raise
 
 
 def kcore_oracle_sql(

@@ -37,11 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from computer_vision_foundations_spark.operators.components import (
-    _ckpt_partitioned,
-    _ckpt_rdd,
-    _release,
-)
+from computer_vision_foundations_spark.operators._iterative import Rounds, mirror
 
 __all__ = [
     "label_propagation",
@@ -56,81 +52,44 @@ def label_propagation(
     dst: str = "id_b",
     n_rounds: int = 4,
     edges_distinct: bool = False,
-    broadcast_labels: bool = True,
 ) -> DataFrame:
     """``(node, community)`` after ``n_rounds`` synchronous LPA
     rounds; labels start as node ids, each round every node takes the
     most frequent neighbor label (ties → smallest).
 
-    ``broadcast_labels`` broadcasts the per-round (node, community)
-    table into the edge join — the pagerank ``broadcast_degrees``
-    16-byte-row size contract (flip off beyond ~10^8 nodes). With it
-    on, the checkpointed edge list is scanned, never re-shuffled, each
-    round; the mode aggregate's partials are the only exchange
-    (round-12, guide §3.1/§2.4). Votes are integer counts, so the
-    result is join-strategy independent.
-
-    With it OFF (the >1e8-node regime), the edge list is checkpointed
-    HASH-PARTITIONED on the round join key ``v`` (r13, guide
-    §2.4/§3.3): each round shuffles only the node-sized label table
-    into the edge layout, with a ``shuffle_hash`` hint so the edge
-    stream is hash-probed, never re-sorted. Per-round edge-list
-    exchanges: 1 → 0; the mode aggregate's map-side partials remain
-    the only wide per-round exchange."""
-    _b = (
-        F.broadcast
-        if broadcast_labels
-        else (lambda d: d.hint("shuffle_hash"))
-    )
-    # explode-mirror, NOT unionByName(select, select): a union of two
-    # selects of the same frame embeds the (expensive) upstream pair
-    # pipeline TWICE in the plan — it ran twice before the checkpoint
-    # (round-8 measured: ~2.5 s of q41's fixed cost at sf0.1)
-    sym = (
-        edges.where(F.col(src) != F.col(dst))
-        .select(
-            F.explode(
-                F.array(
-                    F.struct(F.col(src).alias("u"), F.col(dst).alias("v")),
-                    F.struct(F.col(dst).alias("u"), F.col(src).alias("v")),
-                )
-            ).alias("_e")
-        )
-        .select("_e.u", "_e.v")
-    )
+    The per-round (node, community) table joins the edge list on ``v``
+    in the layout ``operators/_iterative`` works out from the edge
+    count; the mode aggregate's map-side partials are the only other
+    per-round exchange. Votes are integer counts, so the result is
+    join-strategy independent."""
+    sym = mirror(edges.where(F.col(src) != F.col(dst)), src, dst)
     if not edges_distinct:
         # duplicate edges would double-count votes; skip the shuffle
         # only when the caller ATTESTS unique unordered pairs (every
         # pair generator here emits each pair once) — the mirror of a
         # unique pair set is unique
         sym = sym.distinct()
-    sym = (
-        sym.localCheckpoint()
-        if broadcast_labels
-        else _ckpt_partitioned(sym, "v")
-    )
-    sym_rdd = _ckpt_rdd(sym)
-    # Round 1 fused into initialization (r13 — the components.py
-    # "round 0 fused" trick, LPA never had it): labels start as node
-    # ids, so round 1's "most frequent neighbor LABEL" is just the
-    # most frequent neighbor ID — ONE aggregate over the edge list,
-    # no identity-label table to build/checkpoint and no round-1 join.
-    # Same deterministic mode (ties → smallest); node set = distinct u
-    # = exactly the old init's label keys (sym is mirrored, so every
-    # node appears as u).
-    if n_rounds >= 1:
-        labels = (
-            sym.groupBy("u")
-            .agg(F.mode("v", True).alias("community"))
-            .select(F.col("u").alias("node"), "community")
-        )
-    else:
-        labels = sym.select(F.col("u").alias("node")).distinct().select(
-            "node", F.col("node").alias("community")
-        )
-    labels = labels.localCheckpoint()
-    labels_rdd = _ckpt_rdd(labels)
-    try:
+    with Rounds() as rounds:
+        sym = rounds.edges(sym, "v")
+        # Round 1 fused into initialization (r13 — the components.py
+        # "round 0 fused" trick, LPA never had it): labels start as node
+        # ids, so round 1's "most frequent neighbor LABEL" is just the
+        # most frequent neighbor ID — ONE aggregate over the edge list,
+        # no identity-label table to build/checkpoint and no round-1 join.
+        # Same deterministic mode (ties → smallest); node set = distinct u
+        # = exactly the old init's label keys (sym is mirrored, so every
+        # node appears as u).
+        if n_rounds >= 1:
+            labels = (
+                sym.groupBy("u")
+                .agg(F.mode("v", True).alias("community"))
+                .select(F.col("u").alias("node"), "community")
+            )
+        else:
+            labels = sym.select(F.col("u").alias("node")).distinct().select(
+                "node", F.col("node").alias("community")
+            )
+        labels = ckpt = rounds.checkpoint(labels)
         for i in range(1, n_rounds):
             # deterministic argmax as ONE aggregate: mode(community,
             # deterministic=true) = the most frequent neighbor label,
@@ -141,7 +100,7 @@ def label_propagation(
             # (u, community)-count + argmax shuffle pair (round-9
             # verdict #7's fuse suggestion)
             nxt = (
-                sym.join(_b(labels), sym["v"] == labels["node"])
+                sym.join(rounds.side(labels), sym["v"] == labels["node"])
                 .groupBy("u")
                 .agg(F.mode("community", True).alias("community"))
                 .select(F.col("u").alias("node"), "community")
@@ -153,18 +112,14 @@ def label_propagation(
             # halves the checkpoint jobs with identical labels —
             # sym is itself checkpointed, so the deeper plan rescans
             # cached blocks, never the upstream pair pipeline. The
-            # LAST round always checkpoints: the finally-release of
-            # sym's blocks would otherwise pull them out from under
-            # the returned (lazy) plan
+            # LAST round always checkpoints, so the returned plan
+            # reads the final labels only and sym's blocks are
+            # released on return
             if i % 2 == 1 or i == n_rounds - 1:
-                nxt = nxt.localCheckpoint()
-                _release(labels_rdd)
-                labels, labels_rdd = nxt, _ckpt_rdd(nxt)
+                labels = ckpt = rounds.advance(ckpt, nxt)
             else:
                 labels = nxt
-    finally:
-        _release(sym_rdd)
-    return labels.orderBy("node")
+        return rounds.result(labels.orderBy("node"))
 
 
 def label_propagation_quotient(

@@ -10,10 +10,10 @@ mass redistribution:
 where ``D_i`` is the total rank held by dangling nodes (no out-edges).
 
 Spark-first shape (per iteration):
-- contributions: edges ⋈ ranks on ``src`` (shuffle on src), out-degree
-  joined broadcast (degree table is |V|-sized but only (src, deg) —
-  small relative to edges; caller can disable), then one hash
-  aggregate on ``dst`` — shuffles carry (node, double) pairs only.
+- contributions: edges ⋈ ranks on ``src``, out-degree joined in the
+  same node-sized layout (degree table is |V|-sized but only (src,
+  deg) — small relative to edges), then one hash aggregate on ``dst``
+  — shuffles carry (node, double) pairs only.
 - dangling mass: a LEFT ANTI join + global agg → a 1-row DataFrame
   crossJoin'd back (broadcast) — never a driver collect.
 - each round's rank table is ``localCheckpoint``'d, exactly like
@@ -38,11 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from computer_vision_foundations_spark.operators.components import (
-    _ckpt_partitioned,
-    _ckpt_rdd,
-    _release,
-)
+from computer_vision_foundations_spark.operators._iterative import Rounds
 
 __all__ = ["pagerank"]
 
@@ -53,96 +49,69 @@ def pagerank(
     dst: str = "dst",
     damping: float = 0.85,
     n_iter: int = 5,
-    broadcast_degrees: bool = True,
-    broadcast_ranks: bool = True,
 ) -> DataFrame:
     """``(node, rank)`` after ``n_iter`` damped power iterations.
 
     ``edges`` is a directed edge list; duplicates are collapsed.
-    Ranks sum to 1 across all nodes appearing in ``edges``. With
-    ``broadcast_degrees`` the (src, out_deg) table is broadcast —
-    right for graphs whose node table fits executor memory (degree
-    rows are 16 bytes; 10^8 nodes ≈ 1.6 GB: flip it off beyond that
-    and the join falls back to a shuffle on src, which AQE plans).
-    ``broadcast_ranks`` extends the same contract to the per-round
-    (node, double) rank table and the aggregated contribution table —
-    the SAME size class as the degree table, so the two flags share
-    one executor-memory bound. With both on, the checkpointed edge
-    list is never re-shuffled: each round is one edge scan + broadcast
-    hash joins + a map-side-combined aggregate of (node, double) rows
-    (round-12, guide §3.1/§2.4 — the per-round sort-merge joins
-    re-sorted the edge list every iteration).
-
-    With either flag OFF (the >1e8-node regime), the edge list is
-    checkpointed HASH-PARTITIONED on ``src`` (r13, guide §2.4/§3.3):
-    the degree aggregate and the per-round deg/rank joins consume that
-    layout exchange-free — only the node-sized rank table shuffles
-    into it each round, with a ``shuffle_hash`` hint so the edge
-    stream is never re-sorted. Per-round edge-list exchanges: 1 → 0.
+    Ranks sum to 1 across all nodes appearing in ``edges``. The
+    (src, out_deg) table, the per-round (node, double) rank table and
+    the aggregated contribution table are all node-sized; they join
+    the edge list (laid out on ``src`` when co-partitioned) in the
+    layout ``operators/_iterative`` works out from the edge count, so
+    no round re-shuffles or re-sorts the edge list.
 
     Eager: each round materializes via ``localCheckpoint`` (see
     module docstring); the returned DataFrame is the checkpointed
     final round.
     """
-    e = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")
-    ).distinct()
-    co_partition = not (broadcast_degrees and broadcast_ranks)
-    e = _ckpt_partitioned(e, "src") if co_partition else e.localCheckpoint()
-    e_rdd = _ckpt_rdd(e)
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    deg = e.groupBy("src").agg(F.count("*").alias("out_deg"))
-    if broadcast_degrees:
-        deg = F.broadcast(deg)
-    else:
-        # src-partitioned edge layout + derived deg (same layout):
-        # hash-build deg per partition instead of sorting the edges
-        deg = deg.hint("shuffle_hash")
-    n_total = nodes.count()  # scalar; node table already materialized
-    n_lit = F.lit(float(n_total))
-    base = (F.lit(1.0) - F.lit(damping)) / n_lit
-    ranks = nodes.select("node", (F.lit(1.0) / n_lit).alias("r"))
-    ranks_rdd = None
-    _b = (
-        F.broadcast if broadcast_ranks else (lambda d: d.hint("shuffle_hash"))
-    )
-    for _ in range(n_iter):
-        contrib = (
-            e.join(deg, "src")
-            .join(_b(ranks.withColumnRenamed("node", "src")), "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.col("r") / F.col("out_deg")).alias("contrib"))
+    with Rounds() as rounds:
+        e = rounds.edges(
+            edges.select(
+                F.col(src).alias("src"), F.col(dst).alias("dst")
+            ).distinct(),
+            "src",
+            nodes_per_row=2,
         )
-        dangling = (
-            ranks.join(deg, ranks["node"] == deg["src"], "left_anti")
-            .agg(F.coalesce(F.sum("r"), F.lit(0.0)).alias("dm"))
+        nodes = rounds.checkpoint(
+            e.select(F.col("src").alias("node"))
+            .unionByName(e.select(F.col("dst").alias("node")))
+            .distinct()
         )
-        new = (
-            nodes.join(_b(contrib), "node", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                (
-                    base
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("contrib"), F.lit(0.0))
-                        + F.col("dm") / n_lit
-                    )
-                ).alias("r"),
+        # co-partitioned, deg derives from the src layout: hash-build
+        # it per partition instead of sorting the edges
+        deg = rounds.side(e.groupBy("src").agg(F.count("*").alias("out_deg")))
+        n_total = nodes.count()  # scalar; node table already materialized
+        n_lit = F.lit(float(n_total))
+        base = (F.lit(1.0) - F.lit(damping)) / n_lit
+        ranks = nodes.select("node", (F.lit(1.0) / n_lit).alias("r"))
+        for _ in range(n_iter):
+            contrib = (
+                e.join(deg, "src")
+                .join(rounds.side(ranks.withColumnRenamed("node", "src")), "src")
+                .groupBy(F.col("dst").alias("node"))
+                .agg(F.sum(F.col("r") / F.col("out_deg")).alias("contrib"))
             )
-            .localCheckpoint()  # materializes; prev round now dead
-        )
-        _release(ranks_rdd)
-        ranks_rdd = _ckpt_rdd(new)
-        ranks = new
-    _release(e_rdd)  # edges no longer needed once the loop is done
-    return ranks.select("node", F.col("r").alias("rank"))
+            dangling = (
+                ranks.join(deg, ranks["node"] == deg["src"], "left_anti")
+                .agg(F.coalesce(F.sum("r"), F.lit(0.0)).alias("dm"))
+            )
+            ranks = rounds.advance(
+                ranks,
+                nodes.join(rounds.side(contrib), "node", "left")
+                .crossJoin(F.broadcast(dangling))
+                .select(
+                    "node",
+                    (
+                        base
+                        + F.lit(damping)
+                        * (
+                            F.coalesce(F.col("contrib"), F.lit(0.0))
+                            + F.col("dm") / n_lit
+                        )
+                    ).alias("r"),
+                ),
+            )
+        return rounds.result(ranks.select("node", F.col("r").alias("rank")))
 
 
 def pagerank_oracle_sql(

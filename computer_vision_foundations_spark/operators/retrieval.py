@@ -30,7 +30,6 @@ engines (float sum order is not associative).
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -86,12 +85,12 @@ def phrase_search(
     ).distinct()
     # the filtered postings feed one join per phrase slot; unpersisted,
     # every slot replayed the corpus tokenize+posexplode (round-12 plan
-    # audit: 98 Exchanges for 3 slots). Persist the (small, DF-bounded)
-    # postings once with an eager count — the cdc/winnow discipline.
-    postings = postings.join(F.broadcast(vocab), "term", "left_semi").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    postings.count()
+    # audit: 98 Exchanges for 3 slots). Materialize the (small,
+    # DF-bounded) postings once with one eager localCheckpoint job; the
+    # ContextCleaner frees its blocks once the result is unreachable.
+    postings = postings.join(
+        F.broadcast(vocab), "term", "left_semi"
+    ).localCheckpoint()
 
     # (phrase_id, slot, term) rows — model-sized, broadcast per slot
     slots = phrases.select(

@@ -27,7 +27,6 @@ concrete intervals so a downstream pass can cut them out.
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -86,12 +85,9 @@ def duplicated_span_islands(
     # the occurrence stream feeds two consumers (the doc-frequency
     # aggregate and the semi-join probe); unpersisted, both replayed
     # the tokenize + per-window md5 pipeline — the operator's dominant
-    # cost. Persist once with an eager count (the cdc/winnow
-    # discipline).
-    occ = _span_occurrences(df, id_col, text_col, n).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    occ.count()
+    # cost. Materialize once with one eager localCheckpoint job; the
+    # ContextCleaner frees its blocks once the result is unreachable.
+    occ = _span_occurrences(df, id_col, text_col, n).localCheckpoint()
     frequent = (
         occ.groupBy("h")
         .agg(F.count_distinct(id_col).alias("df"))

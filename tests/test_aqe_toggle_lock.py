@@ -1,11 +1,11 @@
-"""`components._ckpt_partitioned` toggles AQE session-wide; concurrent
+"""`_iterative._ckpt_partitioned` toggles AQE session-wide; concurrent
 callers must leave it at the value it had before any of them ran."""
 
 import threading
 import time
 from concurrent.futures import ThreadPoolExecutor
 
-from computer_vision_foundations_spark.operators.components import _ckpt_partitioned
+from computer_vision_foundations_spark.operators._iterative import _ckpt_partitioned
 
 
 class _Frame:

@@ -3,8 +3,9 @@ operators — r13.
 
 Two properties, per operator:
 
-1. RESULT IDENTITY: with ``broadcast_*=False`` the output equals the
-   broadcast-on default. Integer-valued operators (LPA votes, component
+1. RESULT IDENTITY: with the broadcast bound forced below the graph
+   (``_iterative.BROADCAST_MAX_NODES = 0``) the output equals the
+   broadcast default. Integer-valued operators (LPA votes, component
    mins, k-core degrees) must match exactly; the float power iterations
    (pagerank/HITS) must match at the registry queries' rounding (they
    differ only in double summation order, like any partitioning change).
@@ -18,8 +19,10 @@ Two properties, per operator:
 from itertools import combinations
 
 import pyspark.sql.classic.dataframe as cdf
+import pytest
 from pyspark.sql import functions as F
 
+from computer_vision_foundations_spark.operators import _iterative
 from computer_vision_foundations_spark.operators.components import (
     connected_components,
 )
@@ -39,28 +42,37 @@ def _edges(spark):
     return spark.createDataFrame(pairs, "id_a long, id_b long")
 
 
+@pytest.fixture
+def copartitioned(monkeypatch):
+    """Run the operators as on a graph beyond the broadcast bound."""
+    return lambda: monkeypatch.setattr(_iterative, "BROADCAST_MAX_NODES", 0)
+
+
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_lpa_off_equals_on(spark):
+def test_lpa_off_equals_on(spark, copartitioned):
     e = _edges(spark)
     on = _rows(label_propagation(e))
-    off = _rows(label_propagation(e, broadcast_labels=False))
+    copartitioned()
+    off = _rows(label_propagation(e))
     assert on == off
 
 
-def test_components_off_equals_on(spark):
+def test_components_off_equals_on(spark, copartitioned):
     e = _edges(spark)
     on = _rows(connected_components(e))
-    off = _rows(connected_components(e, broadcast_labels=False))
+    copartitioned()
+    off = _rows(connected_components(e))
     assert on == off
 
 
-def test_kcore_off_equals_on(spark):
+def test_kcore_off_equals_on(spark, copartitioned):
     e = _edges(spark)
     on = _rows(k_core(e, k=3))
-    off = _rows(k_core(e, k=3, broadcast_survivors=False))
+    copartitioned()
+    off = _rows(k_core(e, k=3))
     assert on == off
 
 
@@ -72,24 +84,24 @@ def _rounded(df, digits=9):
     return _rows(df.select(*num))
 
 
-def test_pagerank_off_equals_on_rounded(spark):
+def test_pagerank_off_equals_on_rounded(spark, copartitioned):
     e = _edges(spark).selectExpr("id_a as src", "id_b as dst")
     on = _rounded(pagerank(e))
-    off = _rounded(
-        pagerank(e, broadcast_degrees=False, broadcast_ranks=False)
-    )
+    copartitioned()
+    off = _rounded(pagerank(e))
     assert on == off
 
 
-def test_hits_off_equals_on_rounded(spark):
+def test_hits_off_equals_on_rounded(spark, copartitioned):
     e = _edges(spark).selectExpr("id_a as src", "id_b as dst")
     on = _rounded(hits(e), digits=6)
-    off = _rounded(hits(e, broadcast_scores=False), digits=6)
+    copartitioned()
+    off = _rounded(hits(e), digits=6)
     assert on == off
 
 
-def test_off_round_plan_reads_edges_without_exchange(spark):
-    """The LPA round join at broadcast_labels=False must consume the
+def test_off_round_plan_reads_edges_without_exchange(spark, copartitioned):
+    """The co-partitioned LPA round join must consume the
     v-partitioned edge checkpoint directly: its plan contains a
     ShuffledHashJoin whose streamed side is the bare edge scan — no
     Exchange, no Sort on the edge side (the label side still shuffles:
@@ -106,12 +118,14 @@ def test_off_round_plan_reads_edges_without_exchange(spark):
         )
         return orig(self, eager)
 
+    copartitioned()
     cdf.DataFrame.localCheckpoint = patched
     try:
-        label_propagation(e, broadcast_labels=False)
+        label_propagation(e)
     finally:
         cdf.DataFrame.localCheckpoint = orig
-    # captured[0] is the edge checkpoint itself; rounds follow
+    # captured[0:2] are the edge checkpoint and its re-layout; rounds
+    # follow
     round_plans = [p for p in captured[1:] if "ShuffledHashJoin" in p]
     assert round_plans, "no round plan captured"
     for plan in round_plans:

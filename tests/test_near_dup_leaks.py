@@ -1,10 +1,16 @@
 """A long-lived session keeps no storage from the near-dup pair
-generators: once a result is collected and dropped, neither the
-CacheManager nor the persistent-RDD table holds anything they made."""
+generators, nor from the operators that materialize an intermediate
+table they read several times (span islands, event disorder, market
+basket, phrase search): once a result is collected and dropped,
+neither the CacheManager nor the persistent-RDD table holds anything
+they made."""
+
+from datetime import datetime, timedelta
 
 import gc
 import time
 
+from computer_vision_foundations_spark.operators.basket import basket_pair_rules
 from computer_vision_foundations_spark.operators.cdc import chunk_dedup_stats
 from computer_vision_foundations_spark.operators.cf import item_cosine_pairs
 from computer_vision_foundations_spark.operators.dedup import (
@@ -16,8 +22,15 @@ from computer_vision_foundations_spark.operators.dedup import (
     simhash_pairs,
     winnow_near_duplicates,
 )
+from computer_vision_foundations_spark.operators.disorder import (
+    event_disorder_stats,
+)
 from computer_vision_foundations_spark.operators.ppjoin import (
     prefix_jaccard_pairs,
+)
+from computer_vision_foundations_spark.operators.retrieval import phrase_search
+from computer_vision_foundations_spark.operators.spans import (
+    duplicated_span_islands,
 )
 
 
@@ -43,6 +56,19 @@ def _generators(spark, variant: int):
         "bk long, it long",
     )
     snap = minhash_signatures(docs.limit(2), n_hashes=8, hash_fn="md5")
+    t0 = datetime(2024, 1, 1)
+    events = spark.createDataFrame(
+        [
+            (u, t0 + timedelta(seconds=s), t0 + timedelta(seconds=a), 10 * u + s)
+            for u in range(2)
+            for s, a in [(0, 1), (5, 2 + variant), (3, 4), (9, 9)]
+        ],
+        "user_id long, ts timestamp, arrived timestamp, event_id long",
+    )
+    phrases = spark.createDataFrame(
+        [(1, ["quick", "brown"]), (2, ["lazy", "dog"])],
+        "phrase_id long, terms array<string>",
+    )
     return [
         ngram_jaccard_pairs(docs, threshold=0.3),
         containment_pairs(docs, threshold=0.3),
@@ -55,6 +81,10 @@ def _generators(spark, variant: int):
         prefix_jaccard_pairs(docs, threshold=0.3),
         item_cosine_pairs(baskets, "bk", "it", min_cooc=1),
         chunk_dedup_stats(docs, w=4, modulus=4),
+        duplicated_span_islands(docs, n=3),
+        event_disorder_stats(events, "user_id", "ts", "arrived", "event_id"),
+        basket_pair_rules(baskets, "bk", "it", min_pair_count=1),
+        phrase_search(docs, phrases),
     ]
 
 

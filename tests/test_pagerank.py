@@ -7,6 +7,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from computer_vision_foundations_spark.operators import _iterative
 from computer_vision_foundations_spark.operators.pagerank import (
     pagerank,
     pagerank_oracle_sql,
@@ -55,9 +56,11 @@ def test_pagerank_sums_to_one_and_dangling_handled(spark):
     assert got[6] > 0
 
 
-def test_pagerank_no_broadcast_path(spark):
+def test_pagerank_no_broadcast_path(spark, monkeypatch):
     df = spark.createDataFrame(EDGES, "src long, dst long")
-    a = {r.node: r["rank"] for r in pagerank(df, broadcast_degrees=False).collect()}
+    with monkeypatch.context() as m:
+        m.setattr(_iterative, "BROADCAST_MAX_NODES", 0)
+        a = {r.node: r["rank"] for r in pagerank(df).collect()}
     b = {r.node: r["rank"] for r in pagerank(df).collect()}
     assert a == b
 
